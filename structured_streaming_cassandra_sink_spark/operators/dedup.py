@@ -494,7 +494,8 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     shifts codegen to single instructions. Plan shape is unchanged: one
     explode, one groupBy with map-side partials, one shuffle of
     (doc_id, 64 ints)."""
-    h = F.md5("tok")
+    if bits != 64:
+        raise ValueError(f"simhash bits must be 64 (two-word nibble parse), got {bits}")
     # conv(hex, 16, 10) returns a decimal STRING; 8 hex chars <= 2^32-1
     # always fits bigint. md5() is CSE'd by codegen across the two refs.
     tok = docs.select(
@@ -504,7 +505,6 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
         F.expr("CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT)").alias("va"),
         F.expr("CAST(conv(substring(md5(tok), 9, 8), 16, 10) AS BIGINT)").alias("vb"),
     )
-    assert bits == 64, "two-word nibble parse is fixed at 64 bits"
 
     def _bit(j: int) -> str:
         k, s = j // 4, j % 4
@@ -537,7 +537,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) -> Da
     agree on >= 1 chunk, so an equi-join per chunk finds ALL of them
     (guaranteed, not probabilistic) — no all-pairs scan. The chunks
     double as both join keys and the hamming computation inputs."""
-    assert max_hamming == SIMHASH_MAX_HAMMING, "sketch chunking is fixed at build"
+    if max_hamming != SIMHASH_MAX_HAMMING:
+        raise ValueError(f"max_hamming must be {SIMHASH_MAX_HAMMING} (sketch chunking), got {max_hamming}")
     sk = simhash(docs)
     cols = [f"c{c}" for c in range(SIMHASH_CHUNKS)]
     ex = sk.select(

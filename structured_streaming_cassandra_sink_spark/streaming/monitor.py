@@ -3,9 +3,13 @@
 The reference's only diagnostics are println calls inside the sink
 (cassandra_sink.scala:21,26,39). The engine replaces that with the
 listener API: per-micro-batch progress (input rate, processed rows,
-batch duration, state-store size) captured as structured records — the
-numbers an operator pages on at 100 TB (watermark lag, state growth,
-batch duration vs trigger interval).
+batch duration and its phases, state-store size) captured as structured
+records — the numbers an operator pages on at 100 TB (watermark lag,
+state growth, batch duration vs trigger interval). The phases split a
+trigger into source work (``latestOffset``, ``getBatch``), planning
+(``queryPlanning``), the sink (``addBatch``) and the offset/commit log
+writes (``walCommit``, ``commitOffsets``), so a sink's share of each
+batch is on record without the Spark UI.
 """
 
 from __future__ import annotations
@@ -23,6 +27,8 @@ class BatchMetrics:
     num_input_rows: int
     duration_ms: int | None
     state_rows: int | None
+    # every ``durationMs`` entry of the progress report, by phase name
+    phases_ms: dict[str, int] = field(default_factory=dict)
 
 
 @dataclass
@@ -40,17 +46,19 @@ class MetricsCollector(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
         state = p.get("stateOperators") or []
+        phases = p.get("durationMs") or {}
         self.batches.append(
             BatchMetrics(
                 query_name=p.get("name") or p.get("id", "?"),
                 batch_id=p.get("batchId", -1),
                 num_input_rows=p.get("numInputRows", 0),
-                duration_ms=(p.get("durationMs") or {}).get("triggerExecution"),
+                duration_ms=phases.get("triggerExecution"),
                 # SUM over all stateful operators: a join+dedup query reports
                 # several entries, and a leak in any of them must show
                 state_rows=sum(op.get("numRowsTotal", 0) for op in state)
                 if state
                 else None,
+                phases_ms=phases,
             )
         )
 

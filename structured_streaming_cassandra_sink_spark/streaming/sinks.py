@@ -12,7 +12,10 @@ idempotence.
 Backends:
 - ``parquet_upsert_sink`` — local twin with the SAME upsert-by-key end
   state as the reference's Cassandra PK table (:71-79): MERGE emulated as
-  read-existing + union + latest-per-key + atomic swap.
+  one pass — latest-per-key over (existing state ∪ micro-batch), then an
+  atomic swap. Each epoch still costs O(state): one shuffle of state ∪
+  batch and a full rewrite of the table.
+- ``manifest_merge_sink`` — the same merge, published by a manifest-log commit.
 - ``parquet_append_sink`` — plain append (for append-semantics queries).
 - ``cassandra_upsert_sink`` — production path via the Spark Cassandra
   Connector (DataSourceV2); Cassandra writes are natively upserts, so the
@@ -22,6 +25,7 @@ Backends:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -82,40 +86,64 @@ def _recover_upsert_dir(path: str) -> None:
         shutil.rmtree(nxt)
 
 
+def _state_merger(key: str, order: list[str]):
+    """Both upsert sinks' merge: ``merge(batch, state_dir)`` is ONE
+    latest-per-key over state ∪ raw batch (idempotence makes a batch
+    dedup of its own redundant), or over the batch alone when there is
+    no state. The state is read with the batch's schema (by column
+    name, so any column order), so no epoch runs a schema-inference
+    job. A state column the batch lacks would be dropped silently, so
+    the names are compared once per sink, on the first epoch that
+    finds a state; a mismatch raises ``ValueError``."""
+    from ..plans.flagship import latest_per_key
+
+    checked = False
+
+    def merge(batch: DataFrame, state_dir: str | None) -> DataFrame:
+        nonlocal checked
+        if state_dir is None:
+            return latest_per_key(batch, key, order)
+        spark = batch.sparkSession
+        if not checked:
+            have = spark.read.parquet(state_dir).columns
+            if sorted(have) != sorted(batch.columns):
+                raise ValueError(
+                    f"upsert state at {state_dir} has columns {sorted(have)}, "
+                    f"micro-batch has {sorted(batch.columns)}"
+                )
+            checked = True
+        existing = spark.read.schema(batch.schema).parquet(state_dir)
+        return latest_per_key(existing.unionByName(batch), key, order)
+
+    return merge
+
+
 def parquet_upsert_sink(path: str, key: str, order: list[str]):
     """Upsert-by-key into a parquet dir: the reference sink's end-state
     semantics, locally testable and restart-idempotent (re-running an
     epoch converges to the same state — same guarantee the reference gets
     from Cassandra PK upserts on replay, :19-23).
 
+    Each epoch is one pass (:func:`_state_merger`): two Spark jobs, one
+    shuffle on ``key``, one window. Its cost is still O(state): the
+    shuffle carries state ∪ batch and the whole table is rewritten.
+
     Crash safety: the merged state is written ONCE to ``path__next``
     (the lazy read of the current state is safe — ``path`` is untouched
     until that write completes), then swapped in by renames:
     current → ``__old``, ``__next`` → current, delete ``__old``. Every
     crash window leaves either the old state, or a complete ``__next``
-    that :func:`_recover_upsert_dir` adopts on the next epoch — the
-    accumulated table is never the casualty (the round-1 rmtree-then-
-    rename swap could drop ALL prior state if the process died between
-    the two calls).
+    that :func:`_recover_upsert_dir` adopts on the next epoch.
 
     Scale note: at 100 TB this becomes Delta/Iceberg MERGE INTO or the
     Cassandra connector below — the read-union-rewrite here is the
     jar-free local twin, not the production plan."""
-    from ..plans.flagship import latest_per_key
+    merge = _state_merger(key, order)
 
     def write(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
         _recover_upsert_dir(path)
-        batch = latest_per_key(df, key, order)
-        if os.path.isdir(path):
-            existing = spark.read.parquet(path)
-            merged = latest_per_key(
-                existing.unionByName(batch.select(*existing.columns)), key, order
-            )
-        else:
-            merged = batch
         nxt, old = path + "__next", path + "__old"
-        merged.write.mode("overwrite").parquet(nxt)
+        merge(df, path if os.path.isdir(path) else None).write.mode("overwrite").parquet(nxt)
         if os.path.isdir(path):
             os.rename(path, old)
         os.rename(nxt, path)
@@ -180,23 +208,15 @@ def _manifest_log_dir(path: str) -> str:
     return os.path.join(path, "_log")
 
 
-def _manifest_latest(path: str) -> dict | None:
-    """Highest committed manifest, or None. Only ``<int>.json`` names are
-    commits — tmp files from a crashed commit are invisible here."""
-    import json
-
-    log = _manifest_log_dir(path)
-    if not os.path.isdir(log):
-        return None
-    versions = [
-        int(f[: -len(".json")])
-        for f in os.listdir(log)
-        if f.endswith(".json") and f[: -len(".json")].isdigit()
-    ]
-    if not versions:
-        return None
-    with open(os.path.join(log, f"{max(versions)}.json")) as fh:
+def _read_manifest(path: str, version: int) -> dict:
+    with open(os.path.join(_manifest_log_dir(path), f"{int(version)}.json")) as fh:
         return json.load(fh)
+
+
+def _manifest_latest(path: str) -> dict | None:
+    """Highest committed manifest, or None."""
+    versions = manifest_versions(path)
+    return _read_manifest(path, versions[-1]) if versions else None
 
 
 def manifest_versions(path: str) -> list[int]:
@@ -221,22 +241,12 @@ def read_manifest_table(spark, path: str, version: int | None = None):
     snapshot is byte-identical to what a reader saw at its commit
     instant. Uncommitted/orphaned data dirs are invisible either way —
     this is what makes the sink's crash window harmless."""
-    import json
-
-    if version is None:
-        m = _manifest_latest(path)
-        if m is None:
-            raise FileNotFoundError(f"no committed manifest under {path}")
-    else:
-        f = os.path.join(_manifest_log_dir(path), f"{int(version)}.json")
-        if not os.path.isfile(f):
-            raise FileNotFoundError(
-                f"version {version} not committed under {path}; "
-                f"have {manifest_versions(path)}"
-            )
-        with open(f) as fh:
-            m = json.load(fh)
-    return spark.read.parquet(os.path.join(path, m["data_dir"]))
+    versions = manifest_versions(path)
+    if version is None and versions:
+        version = versions[-1]
+    if version is None or int(version) not in versions:
+        raise FileNotFoundError(f"version {version} not committed under {path}; have {versions}")
+    return spark.read.parquet(os.path.join(path, _read_manifest(path, version)["data_dir"]))
 
 
 def manifest_merge_sink(path: str, key: str, order: list[str], retain: int | None = 2):
@@ -269,24 +279,14 @@ def manifest_merge_sink(path: str, key: str, order: list[str], retain: int | Non
     the guard in step 2. Unlike ``parquet_upsert_sink`` the current
     state is NEVER renamed away — readers can run concurrently with a
     commit."""
-    import json
-
-    from ..plans.flagship import latest_per_key
+    merge = _state_merger(key, order)
 
     def write(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
         m = _manifest_latest(path)
         if m is not None and int(m["epoch_id"]) == int(epoch_id):
             return  # replayed epoch already fully committed
         version = 0 if m is None else int(m["version"]) + 1
-        batch = latest_per_key(df, key, order)
-        if m is not None:
-            existing = spark.read.parquet(os.path.join(path, m["data_dir"]))
-            merged = latest_per_key(
-                existing.unionByName(batch.select(*existing.columns)), key, order
-            )
-        else:
-            merged = batch
+        merged = merge(df, None if m is None else os.path.join(path, m["data_dir"]))
         data_dir = os.path.join("data", f"v{version}-e{epoch_id}")
         merged.write.mode("overwrite").parquet(os.path.join(path, data_dir))
         log = _manifest_log_dir(path)
@@ -306,10 +306,7 @@ def manifest_merge_sink(path: str, key: str, order: list[str], retain: int | Non
             return
         versions = manifest_versions(path)
         keep_versions = set(versions[-max(int(retain), 2):])
-        keep_dirs = set()
-        for v in keep_versions:
-            with open(os.path.join(log, f"{v}.json")) as fh:
-                keep_dirs.add(json.load(fh)["data_dir"])
+        keep_dirs = {_read_manifest(path, v)["data_dir"] for v in keep_versions}
         # manifests BEFORE data dirs: a log entry must never outlive its
         # files, so if we crash mid-GC the worst case is an orphan data
         # dir (invisible, harmless), never a manifest pointing at

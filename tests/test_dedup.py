@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from structured_streaming_cassandra_sink_spark.operators.dedup import (
@@ -46,6 +47,16 @@ def test_identical_docs_have_zero_hamming(spark):
     assert sk[1] != sk[3]
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_pairs(docs).collect()}
     assert pairs.get((1, 2)) == 0
+
+
+def test_simhash_rejects_unsupported_widths(spark):
+    """The sketch layout is fixed at 64 bits in 4 chunks; other widths
+    are a ValueError (an assert would vanish under ``python -O``)."""
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bits must be 64"):
+        simhash(docs, bits=32)
+    with pytest.raises(ValueError, match="max_hamming"):
+        simhash_pairs(docs, max_hamming=5)
 
 
 def test_exact_dedup_collapses_duplicates(spark):

@@ -593,12 +593,15 @@ def test_kmeans_centroids_literal_map_assign(spark, sf_dir):
 
     # exactly one BNLJ: the 1-row centroid ride-along, nothing else
     assert len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)) == 1
-    # at most ONE Exchange: hashpartitioning is banned above, so the one
-    # still permitted is the narrow (cluster, dim) update aggregate's
-    # exchange when lineage renders it; the checkpointed corpus
-    # (spread()'s fan-out happened before the checkpoint) feeds a
-    # map-only assign with no shuffle of its own
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1
+    # the checkpointed corpus feeds a map-only assign with no shuffle of
+    # its own. The one shuffle Exchange permitted is spread()'s
+    # round-robin fan-out of the corpus, if the checkpoint's lineage
+    # renders it; no hash, range or single-partition exchange may appear.
+    parts = re.findall(
+        r"\(\d+\) Exchange\n(?:(?!\(\d+\) ).*\n)*?Arguments: (\w+)", plan
+    )
+    n_exchanges = len(re.findall(r"\(\d+\) Exchange\n", plan))
+    assert n_exchanges <= 1 and parts == ["RoundRobinPartitioning"] * n_exchanges, parts
     assert "least(" in plan
 
 

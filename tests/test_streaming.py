@@ -9,6 +9,7 @@ deterministic.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
@@ -413,6 +414,15 @@ def test_metrics_listener_captures_progress(spark, sf_dir, message_dir):
         batches = [b for b in collector.batches if b.query_name == "t_metrics"]
         assert collector.total_input_rows("t_metrics") == n_msgs
         assert any(b.state_rows for b in batches), "stateful agg must report state size"
+        # every durationMs phase of a batch that read input is kept, and
+        # each lies inside its trigger
+        fed = [b for b in batches if b.num_input_rows]
+        assert fed
+        for b in fed:
+            for phase in ("latestOffset", "getBatch", "queryPlanning", "addBatch",
+                          "walCommit", "commitOffsets"):
+                assert 0 <= b.phases_ms[phase] <= b.duration_ms, (phase, b.phases_ms)
+            assert b.phases_ms["triggerExecution"] == b.duration_ms
     finally:
         spark.streams.removeListener(collector)
 
@@ -885,6 +895,100 @@ def test_upsert_sink_crash_recovery(spark, tmp_path):
     assert {r.k: r.v for r in spark.read.parquet(path).collect()} == {
         1: 11, 2: 26, 3: 30,
     }
+
+
+@pytest.mark.parametrize("which", ["parquet_upsert_sink", "manifest_merge_sink"])
+def test_upsert_sink_schema_drift_raises(spark, tmp_path, which):
+    """The state is read with the micro-batch's schema, so a state column
+    the batch lacks (or a batch column the state lacks) would vanish
+    silently; the first epoch that finds a state compares the column
+    names and raises instead, before anything is written."""
+    from structured_streaming_cassandra_sink_spark.streaming import sinks
+
+    make = getattr(sinks, which)
+    path = str(tmp_path / "drift")
+    make(path, key="k", order=["v"])(
+        spark.createDataFrame([(1, 10, "a")], "k int, v int, w string"), 0
+    )
+    for batch in (
+        spark.createDataFrame([(1, 11)], "k int, v int"),
+        spark.createDataFrame([(1, 11, "b", 1.0)], "k int, v int, w string, x double"),
+    ):
+        with pytest.raises(ValueError, match="columns"):
+            make(path, key="k", order=["v"])(batch, 1)
+    read = spark.read.parquet if which == "parquet_upsert_sink" else (
+        lambda p: sinks.read_manifest_table(spark, p)
+    )
+    assert [tuple(r) for r in read(path).collect()] == [(1, 10, "a")]
+
+
+def test_upsert_sink_merges_reordered_foreign_state(spark, tmp_path):
+    """A pre-existing state written by another writer (pyarrow) in a
+    different column order, with a UTC timestamp column, merges by
+    column name: updated keys take the batch row, new keys are added,
+    untouched keys keep their state row."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from structured_streaming_cassandra_sink_spark.streaming.sinks import parquet_upsert_sink
+
+    utc = dt.timezone.utc
+    t = [dt.datetime(2024, 1, 1, h, tzinfo=utc) for h in range(4)]
+    path = tmp_path / "state"
+    path.mkdir()
+    pq.write_table(
+        pa.table({
+            "name": ["a", "b"],
+            "ts": pa.array(t[:2], pa.timestamp("us", tz="UTC")),
+            "k": pa.array([1, 2], pa.int64()),
+        }),
+        str(path / "part-00000.parquet"),
+    )
+    sink = parquet_upsert_sink(str(path), key="k", order=["ts"])
+    batch = spark.createDataFrame(
+        [(2, t[3], "b2"), (2, t[0], "b-stale"), (3, t[2], "c")],
+        "k long, ts timestamp, name string",
+    )
+    sink(batch, 0)
+    got = {r.k: (r.ts.astimezone(utc), r.name) for r in spark.read.parquet(str(path)).collect()}
+    assert got == {1: (t[0], "a"), 2: (t[3], "b2"), 3: (t[2], "c")}
+
+
+def test_upsert_sink_one_pass_plan(spark, tmp_path):
+    """After the first epoch, an epoch over existing state is one pass:
+    at most 2 Spark jobs (the shuffle map stage and the write) and one
+    Exchange on the key — no batch-only dedup, no schema-inference job."""
+    from structured_streaming_cassandra_sink_spark.streaming.sinks import (
+        _state_merger,
+        parquet_upsert_sink,
+    )
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "one_pass")
+    sink = parquet_upsert_sink(path, key="k", order=["v"])
+
+    def batch(e):
+        return spark.createDataFrame([(i, 10 * e + i) for i in range(e, 20)], "k int, v int")
+
+    sink(batch(0), 0)
+    sink(batch(1), 1)  # first epoch over a state: the one column check
+    group, outer = "t_upsert_one_pass", sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        sink(batch(2), 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert {r.k: r.v for r in spark.read.parquet(path).collect()} == {
+        0: 0, 1: 11, **{i: 20 + i for i in range(2, 20)}
+    }
+
+    merged = _state_merger("k", ["v"])(batch(3), path)
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning\(k#", plan)) == 1, plan
+    assert plan.count("Window [") == 1, plan
 
 
 def test_rate_limit_bounds_micro_batches(spark, message_dir):
