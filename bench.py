@@ -25,8 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from structured_streaming_cassandra_sink_spark.session import _local_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = str(_local_cores())  # SPARK_GRAFT_CPUS, else the host core count
 
 
 def _sf_from_dir(d: str) -> float:

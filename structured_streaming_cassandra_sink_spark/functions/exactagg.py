@@ -1,12 +1,14 @@
 """Order-independent exact aggregates — the cross-engine float contract.
 
-The sf1-equivalent sweep (10x sf0.1, SURVEY §7.10) caught seven aggregate
-queries whose ``round(sum(x), d)`` / ``round(avg(x), d)`` drifted 1 ulp
-from the DuckDB oracle ONLY at that size: double sums of ~1e11 magnitude
-need all 15-16 significant digits to survive a 4-decimal round, and
-Spark's partial-aggregation order differs from DuckDB's sequential order.
-Same three-failure-mode analysis as ``avg4_exact``
-(operators/timeseries.py — the r5 sf0.1 fix this module generalizes):
+Every formula here is ONE SQL text. DuckDB runs it verbatim in a query's
+oracle; Spark runs the same string through ``F.expr``. There is no
+Column-builder twin, so the two engines cannot drift apart by a
+transcription error, and each aggregate is a single py4j call to build.
+
+Why the formulas look the way they do: plain ``round(sum(x), d)`` /
+``round(avg(x), d)`` drifted 1 ulp from the DuckDB oracle on dense
+groups (first on the sf0.1 hourly rates, then on ~1e11-magnitude sums at
+10x sf0.1, SURVEY §7.10). There are three failure modes:
 
 1. float sums are not associative → quantize to a 1/q grid with
    ``floor(x*q + 0.5)`` (pure IEEE: multiply/add/floor are bit-identical
@@ -14,92 +16,43 @@ Same three-failure-mode analysis as ``avg4_exact``
    exact int64 — integer addition IS associative, so the result cannot
    depend on partial order;
 2. engine ``round(double, d)`` half-rules disagree exactly at
-   representation boundaries → the final d-decimal round is the same
-   floor form, never the engine's round();
+   representation boundaries (Spark rounds the shortest decimal string
+   HALF_UP, DuckDB rounds the binary double) → the final d-decimal round
+   is the same floor form, never the engine's round();
 3. quantized averages are rationals landing exactly on .5*10^-d
    boundaries far more often than generic floats — which is why mode 2
    must be fixed wherever mode 1 is.
 
-Overflow budget: each QUANTIZED VALUE |x|*q must stay under 2^63 (the
-int64 quantizer); the SUM of those values is carried as DECIMAL(38,0)
-on the Spark side — the same ~1e38 headroom as the DuckDB twin's
-HUGEINT promotion of sum(BIGINT) — so a group sum past 2^63 stays
-exact on BOTH engines instead of Spark wrapping silently (ADVICE r5).
-Decimal(38,0)->double and hugeint->double conversions are both
-round-to-nearest of the same exact integer, so the downstream IEEE
-ops still see bit-identical inputs. Callers pick q per column
-(documented at each use).
+The int64 sums ride the hi/lo carrier (``hilo_sum_sql``), exact to
+|sum| < 2^93 with no wide integer type on either engine. Callers pick q
+per column (documented at each use).
 
-Each helper has a ``*_SQL`` twin with IDENTICAL arithmetic so a DuckDB
-oracle can mirror the Spark plan bit-for-bit; three-way fuzz (Spark ==
-DuckDB == pure-IEEE replay) in tests/test_operators.py.
+Literal types: Spark SQL and DuckDB both type a plain literal such as
+``100.0`` as DECIMAL. Against a DOUBLE operand it is coerced to DOUBLE;
+against an integer operand the arithmetic stays DECIMAL (see
+``_SHIFT_D``). ``test_exact_aggregates_plan_has_no_decimal`` pins that
+no query using these texts keeps a Decimal type in its optimized plan.
+New literals are spelled in exponent form (``1e2``), DOUBLE in both
+engines.
+
+Three-way fuzz (Spark == DuckDB == pure-IEEE replay) in
+tests/test_operators.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def qlong(col: Column | str, q: int) -> Column:
-    """``floor(x*q + 0.5)`` as int64 — the exact 1/q-grid quantizer.
-
-    Null-propagating (a NULL input quantizes to NULL, so sum/count skip
-    it exactly like the float aggregates they replace)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * F.lit(float(q)) + F.lit(0.5)).cast("long")
-
-
-def _out_round(x: Column, out_dec: int) -> Column:
-    p = 10.0**out_dec
-    return F.floor(x * F.lit(p) + F.lit(0.5)) / F.lit(p)
-
-
-def _hilo_sum_col(p: Column) -> Column:
-    """Column form of ``hilo_sum_sql`` below — op-for-op identical:
-    lo = p % 2^30 (truncated, both engines), hi = (p - lo) / 2^30.0
-    (exact: a multiple of 2^30 under 2^63 has <= 33 significant bits),
-    recombined with one correctly-rounded int64->double conversion per
-    half, an exact power-of-two multiply and one IEEE add."""
-    shift = 1 << 30
-    lo = p % F.lit(shift)
-    hi = ((p - lo) / F.lit(float(shift))).cast("long")
-    return (
-        F.sum(hi).cast("long").cast("double") * F.lit(float(shift))
-        + F.sum(lo).cast("long").cast("double")
-    )
-
-
-def sum_exact(col: Column | str, q: int, out_dec: int = 4) -> Column:
-    """Order-independent ``round(sum(col), out_dec)`` via an exact sum
-    of 1/q-grid int64-quantized values, carried as the hi/lo int64 pair
-    (r7 — the former DECIMAL(38,0)/HUGEINT carriers convert to double
-    differently past 2^63, ADVICE r6): the int64 halves are exact to
-    |sum| < 2^93; the recombined double is correctly-rounded once
-    magnitudes pass ~2^53, and bit-identical cross-engine because both
-    engines perform the identical IEEE ops in the identical order
-    (ADVICE r7 wording). No wide integer type on either engine."""
-    return _out_round(_hilo_sum_col(qlong(col, q)) / F.lit(float(q)), out_dec)
-
-
-def avg_exact(col: Column | str, q: int, out_dec: int = 4) -> Column:
-    """Order-independent ``round(avg(col), out_dec)``; NULL-safe
-    (count(col), not count(*)) like the float avg it replaces. Sum is
-    the hi/lo carrier — see sum_exact."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = _hilo_sum_col(qlong(c, q))
-    return _out_round(
-        s / (F.count(c).cast("double") * F.lit(float(q))), out_dec
-    )
-
 
 def sum_exact_sql(c: str, q: int, out_dec: int = 4) -> str:
-    """DuckDB twin of sum_exact — same IEEE ops in the same order."""
+    """Order-independent ``round(sum(c), out_dec)``: the exact hi/lo sum
+    of ``c`` on the 1/q grid, divided by q once, then the floor-form
+    round."""
     return fgrid_sql(f"{hilo_sum_sql(qlong_sql(c, q))} / {float(q)}", out_dec)
 
 
 def avg_exact_sql(c: str, q: int, out_dec: int = 4) -> str:
-    """DuckDB twin of avg_exact."""
+    """Order-independent ``round(avg(c), out_dec)``; NULL-skipping like
+    the float avg (``count`` of the quantized value, which is NULL
+    exactly where ``c`` is)."""
     qq = qlong_sql(c, q)
     return fgrid_sql(
         f"{hilo_sum_sql(qq)}"
@@ -142,13 +95,15 @@ HILO_SHIFT = 1 << 30
 
 
 def qlong_sql(c: str, q: int) -> str:
-    """SQL text of ``qlong`` — identical in Spark SQL and DuckDB."""
+    """``floor(c*q + 0.5)`` as BIGINT — the exact 1/q-grid quantizer.
+    NULL in, NULL out, so sum/count skip it like the float aggregates
+    they replace."""
     return f"CAST(floor(({c}) * {float(q)} + 0.5) AS BIGINT)"
 
 
 # Literal spelled in EXPONENT notation: Spark SQL types `1073741824.0`
-# as DECIMAL(11,1) (DuckDB: DOUBLE), which silently routes the per-row
-# hi-division through Decimal128 arithmetic — same exact values (the
+# as DECIMAL(11,1), which against the BIGINT numerator silently routes
+# the per-row hi-division through Decimal128 arithmetic — same exact values (the
 # numerator divides exactly either way) but ~3x the aggregate cost,
 # caught by the r7 bench. `1073741824e0` is DOUBLE in both engines.
 _SHIFT_D = f"{HILO_SHIFT}e0"
@@ -306,7 +261,8 @@ def ln_shared_py(n: int) -> float:
     """Pure-Python twin of ``ln_shared_sql`` — the SAME IEEE ops in the
     SAME order (Python floats are IEEE doubles, no FMA contraction), for
     the replay tests that pin the cross-engine contract."""
-    assert n >= 1
+    if n < 1:
+        raise ValueError(f"ln_shared_py needs an integer n >= 1, got {n!r}")
     k = min(n.bit_length() - 1, 62)
     m = float(n) / float(1 << k)
     t = (m - 1.0) / (m + 1.0)

@@ -18,12 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import ts_millis
-from ..functions.exactagg import (
-    avg_exact,
-    avg_exact_sql,
-    sum_exact,
-    sum_exact_sql,
-)
+from ..functions.exactagg import avg_exact_sql, sum_exact_sql
 from ..plans.registry import query
 from ..sources import load_table
 
@@ -219,16 +214,17 @@ def groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     need every significant digit; partial-agg order differs). Overflow
     budget: price*1e4 ≈ 1e9/row → exact past 1e9 rows/group in int64."""
     li = load_table(spark, "lineitem", sf_dir)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            sum_exact("l_quantity", 10_000).alias("sum_qty"),
-            sum_exact("l_extendedprice", 100).alias("sum_base_price"),
-            sum_exact(disc_price, 10_000).alias("sum_disc_price"),
-            avg_exact("l_quantity", 1_000_000).alias("avg_qty"),
-            avg_exact("l_discount", 1_000_000).alias("avg_disc"),
+            F.expr(sum_exact_sql("l_quantity", 10_000)).alias("sum_qty"),
+            F.expr(sum_exact_sql("l_extendedprice", 100)).alias("sum_base_price"),
+            F.expr(
+                sum_exact_sql("l_extendedprice * (1 - l_discount)", 10_000)
+            ).alias("sum_disc_price"),
+            F.expr(avg_exact_sql("l_quantity", 1_000_000)).alias("avg_qty"),
+            F.expr(avg_exact_sql("l_discount", 1_000_000)).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
             F.countDistinct("l_partkey").alias("n_parts"),
         )
@@ -257,7 +253,7 @@ def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
-        sum_exact("l_extendedprice", 100).alias("revenue"),
+        F.expr(sum_exact_sql("l_extendedprice", 100)).alias("revenue"),
     )
 
 
@@ -453,8 +449,8 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float sums flipped the cents digit against DuckDB at the 10x sweep
     return joined.groupBy("flag_name").agg(
         F.count(F.lit(1)).alias("n_items"),
-        sum_exact(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000, 2
+        F.expr(
+            sum_exact_sql("l_extendedprice * (1 - l_discount)", 10_000, 2)
         ).alias("revenue"),
     )
 
@@ -744,7 +740,7 @@ def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, "orders", sf_dir)
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        sum_exact("o_totalprice", 100).alias("revenue"),
+        F.expr(sum_exact_sql("o_totalprice", 100)).alias("revenue"),
     )
 
 
@@ -1257,7 +1253,7 @@ def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, "orders", sf_dir)
     return o.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        sum_exact("o_totalprice", 100).alias("revenue"),
+        F.expr(sum_exact_sql("o_totalprice", 100)).alias("revenue"),
     )
 
 

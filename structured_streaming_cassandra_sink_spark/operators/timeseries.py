@@ -21,42 +21,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import ts_micros
-from ..functions.exactagg import avg_exact, avg_exact_sql, hilo_sum_sql, qlong
+from ..functions.exactagg import avg_exact_sql, fgrid_sql, hilo_sum_sql, qlong_sql
 from ..plans.registry import query
 from ..sources import load_table, spread
 
 
-def avg4_exact(col: str):
-    """Order-independent ``round(avg(col), 4)``: quantize each value to
-    1e-6 and sum as exact int64, so the result cannot depend on Spark's
-    partial-aggregation order. The sf0.1 sweep caught plain
-    ``round(avg(value), 4)`` drifting 1 ulp from DuckDB on dense hourly
-    buckets (72/100k rows of join_asof flipped at the .00005 boundary —
-    float sums are not associative; sf0.01's sparser buckets never hit
-    the boundary). Integer sums ARE associative, and the single final
-    division runs on identical doubles in both engines. The quantizer is
-    ``floor(x*1e6 + 0.5)`` — NOT ``round``: Spark's round(double) goes
-    through BigDecimal.valueOf (HALF_UP on the SHORTEST DECIMAL STRING of
-    the double) while DuckDB rounds the binary double, and the two
-    disagree exactly at representation boundaries (second sf0.1 FAIL mode
-    on the same three queries); floor and +/* are pure IEEE ops, bit-equal
-    everywhere. The FINAL 4dp rounding uses the same floor form — a
-    quantized average is a rational with denominator count*1e6, so it
-    lands EXACTLY on .00005 boundaries far more often than generic
-    floats, which is where round(double, 4) diverges too (third sf0.1
-    FAIL mode). NULL-safe (count(col), not count(*)). Overflow headroom:
-    |value|*1e6 per row must keep the group sum under 2^63 — at warehouse
-    scale swap to DECIMAL(38,6), same order-independence. SQL twin:
-    AVG4_EXACT_SQL."""
-    q = F.floor(F.col(col) * 1_000_000 + F.lit(0.5)).cast("long")
-    a = F.sum(q) / (F.count(col) * F.lit(1_000_000.0))
-    return F.floor(a * 10_000 + F.lit(0.5)) / F.lit(10_000.0)
-
-
-AVG4_EXACT_SQL = (
-    "floor(sum(CAST(floor({c} * 1000000 + 0.5) AS BIGINT))"
-    " / (count({c}) * 1000000.0) * 10000 + 0.5) / 10000.0"
-)
+# Hourly average rate shared by the as-of joins and gap_fill: the exact
+# 1e-6-grid average, rounded to 4 decimals (functions/exactagg.py). The
+# sf0.1 sweep caught plain round(avg(value), 4) drifting 1 ulp from
+# DuckDB on dense hourly buckets.
+_RATE_SQL = avg_exact_sql("value", 1_000_000)
 
 
 def asof_join(
@@ -126,7 +100,7 @@ def asof_join(
     WITH rates AS (
       SELECT event_type,
              time_bucket(INTERVAL '1 hour', ts) AS hour_ts,
-             {AVG4_EXACT_SQL.format(c="value")} AS hourly_rate
+             {_RATE_SQL} AS hourly_rate
       FROM events GROUP BY 1, 2)
     SELECT e.event_id, e.event_type, r.hourly_rate
     FROM events e ASOF LEFT JOIN rates r
@@ -142,7 +116,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir)
     rates = (
         events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(avg4_exact("value").alias("hourly_rate"))
+        .agg(F.expr(_RATE_SQL).alias("hourly_rate"))
         .select("event_type", F.col("w.start").alias("hour_ts"), "hourly_rate")
     )
     joined = asof_join(
@@ -318,7 +292,7 @@ def sessionize_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH base AS (
       SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
-             {AVG4_EXACT_SQL.format(c="value")} AS rate
+             {_RATE_SQL} AS rate
       FROM events GROUP BY 1, 2),
     bounds AS (
       SELECT event_type, min(hour_ts) AS lo, max(hour_ts) AS hi
@@ -355,7 +329,7 @@ def gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "events", sf_dir)
     base = e.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour_ts")
-    ).agg(avg4_exact("value").alias("rate"))
+    ).agg(F.expr(_RATE_SQL).alias("rate"))
     bounds = base.groupBy("event_type").agg(
         F.min("hour_ts").alias("lo"), F.max("hour_ts").alias("hi")
     )
@@ -1260,39 +1234,46 @@ def interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CUSUM_H = 4.0  # decision threshold, in std units of the hourly series
 
+# cusum_changepoint's arithmetic, one text per step: DuckDB runs it in
+# the oracle below, Spark through F.expr.
+_CS_RATE = avg_exact_sql("value", 1_000_000, 6)
+_CS_M = qlong_sql("rate", 1_000_000)  # m: the rate on its 1e-6 grid
+_CS_EX = "s1 / n / 1e6"
+_CS_MU = fgrid_sql(_CS_EX, 6)
+_CS_SIGMA = fgrid_sql(
+    f"sqrt(greatest(s2d / n / 1e12 - ({_CS_EX}) * ({_CS_EX}), 0))", 6
+)
+_CS_Z = fgrid_sql("(rate - mu) / sigma", 6)
+_CS_CUM = fgrid_sql(
+    "sum(z) OVER (PARTITION BY event_type ORDER BY hour_ts"
+    " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)",
+    6,
+)
+
 
 @query(
     "cusum_changepoint",
     f"""
     WITH hourly AS (
       SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
-             {avg_exact_sql("value", 1_000_000, 6)} AS rate
+             {_CS_RATE} AS rate
       FROM events GROUP BY 1, 2),
     hm AS (
-      SELECT event_type, hour_ts, rate,
-             CAST(floor(rate * 1000000.0 + 0.5) AS BIGINT) AS m
+      SELECT event_type, hour_ts, rate, {_CS_M} AS m
       FROM hourly),
     mom AS (
       SELECT event_type, count(*) AS n, sum(m) AS s1,
              {hilo_sum_sql('m * m')} AS s2d
       FROM hm GROUP BY 1),
     stats AS (
-      SELECT event_type,
-             floor(s1 / n / 1000000.0 * 1e6 + 0.5) / 1e6 AS mu,
-             floor(sqrt(greatest(
-                 s2d / n / 1e12 - (s1 / n / 1000000.0) * (s1 / n / 1000000.0),
-                 0)) * 1e6 + 0.5) / 1e6 AS sigma
+      SELECT event_type, {_CS_MU} AS mu, {_CS_SIGMA} AS sigma
       FROM mom),
     dev AS (
-      SELECT h.event_type, h.hour_ts,
-             floor((h.rate - s.mu) / s.sigma * 1e6 + 0.5) / 1e6 AS z
-      FROM hm h JOIN stats s USING (event_type)
-      WHERE s.sigma > 0),
+      SELECT event_type, hour_ts, {_CS_Z} AS z
+      FROM hm JOIN stats USING (event_type)
+      WHERE sigma > 0),
     cusum AS (
-      SELECT event_type, hour_ts, z,
-             floor(sum(z) OVER (PARTITION BY event_type ORDER BY hour_ts
-                                ROWS UNBOUNDED PRECEDING) * 1e6 + 0.5) / 1e6
-                 AS s_cum
+      SELECT event_type, hour_ts, z, {_CS_CUM} AS s_cum
       FROM dev)
     SELECT event_type, hour_ts, z, s_cum,
            CASE WHEN abs(s_cum) > {CUSUM_H} THEN 1 ELSE 0 END AS drifted
@@ -1325,43 +1306,25 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     All downstream doubles are bit-identical cross-engine because
     their inputs are."""
     e = load_table(spark, "events", sf_dir)
-    Q = 1_000_000
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour_ts")
-    ).agg(avg_exact("value", Q, 6).alias("rate"))
-    hm = hourly.withColumn("m", qlong(F.col("rate"), Q))
+    ).agg(F.expr(_CS_RATE).alias("rate"))
+    hm = hourly.withColumn("m", F.expr(_CS_M))
     mom = hm.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("m").alias("s1"),
         F.expr(hilo_sum_sql("m * m")).alias("s2d"),
     )
-    ex = F.col("s1") / F.col("n") / F.lit(1_000_000.0)
-    ex2 = F.col("s2d") / F.col("n") / F.lit(1e12)
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     stats = mom.select(
-        "event_type",
-        r6(ex).alias("mu"),
-        r6(F.sqrt(F.greatest(ex2 - ex * ex, F.lit(0.0)))).alias("sigma"),
+        "event_type", F.expr(_CS_MU).alias("mu"), F.expr(_CS_SIGMA).alias("sigma")
     )
     dev = (
         hm.join(F.broadcast(stats), "event_type")
         .filter(F.col("sigma") > 0)
-        .select(
-            "event_type",
-            "hour_ts",
-            r6((F.col("rate") - F.col("mu")) / F.col("sigma")).alias("z"),
-        )
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour_ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        .select("event_type", "hour_ts", F.expr(_CS_Z).alias("z"))
     )
     return dev.select(
-        "event_type",
-        "hour_ts",
-        "z",
-        r6(F.sum("z").over(w)).alias("s_cum"),
+        "event_type", "hour_ts", "z", F.expr(_CS_CUM).alias("s_cum")
     ).withColumn(
         "drifted",
         F.when(F.abs(F.col("s_cum")) > CUSUM_H, 1).otherwise(0),
@@ -1592,7 +1555,7 @@ def asof_join_forward(
     WITH rates AS (
       SELECT event_type,
              time_bucket(INTERVAL '1 hour', ts) AS hour_ts,
-             {AVG4_EXACT_SQL.format(c="value")} AS hourly_rate
+             {_RATE_SQL} AS hourly_rate
       FROM events GROUP BY 1, 2)
     SELECT e.event_id, e.event_type, r.hourly_rate AS next_rate
     FROM events e ASOF LEFT JOIN rates r
@@ -1610,7 +1573,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir)
     rates = (
         events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(avg4_exact("value").alias("hourly_rate"))
+        .agg(F.expr(_RATE_SQL).alias("hourly_rate"))
         .select("event_type", F.col("w.start").alias("hour_ts"), "hourly_rate")
     )
     joined = asof_join_forward(
@@ -3127,7 +3090,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH rates AS (
       SELECT event_type,
              epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS htus,
-             {AVG4_EXACT_SQL.format(c="value")} AS hourly_rate
+             {_RATE_SQL} AS hourly_rate
       FROM events GROUP BY 1, 2),
     e AS (SELECT event_id, event_type, epoch_us(ts) AS tus FROM events),
     be AS (
@@ -3171,7 +3134,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tus = ts_micros("ts")
     rates = (
         events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(avg4_exact("value").alias("hourly_rate"))
+        .agg(F.expr(_RATE_SQL).alias("hourly_rate"))
         .select(
             "event_type",
             ts_micros(F.col("w.start")).alias("htus"),

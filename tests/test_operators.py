@@ -128,43 +128,6 @@ def test_asof_join_semantics(spark):
     assert got == {1: 200, 2: 100, 3: None, 4: None}
 
 
-def test_avg4_exact_cross_engine_on_boundaries(spark):
-    """avg4_exact and its SQL twin must agree BIT-FOR-BIT on inputs
-    engineered to sit on every divergence boundary the sf0.1 sweep
-    found in round 5: (a) dense groups where float-sum order tips
-    round(avg) by 1 ulp, (b) values whose shortest decimal string is
-    x.5 but whose binary value is below it (Spark round() goes through
-    BigDecimal.valueOf -> HALF_UP on the STRING; DuckDB rounds the
-    binary double), and (c) quantized averages landing exactly on
-    .00005 — rationals with denominator count*1e6 hit that constantly.
-    The floor(x*s + 0.5)/s form is pure IEEE arithmetic, identical in
-    both engines by construction."""
-    import duckdb
-
-    from structured_streaming_cassandra_sink_spark.operators.timeseries import (
-        AVG4_EXACT_SQL,
-        avg4_exact,
-    )
-
-    rows = []
-    # (b): doubles printing as x.5 at the 1e-6 grid but binary-below
-    rows += [("b", 0.1 + 0.2), ("b", 2.675), ("b", 47.2537499999999994)]
-    # (c): group of 4 averaging exactly to a .00005 boundary
-    rows += [("c", 47.2537), ("c", 47.2538), ("c", 47.2537), ("c", 47.2538)]
-    # (a): a dense group of awkward floats
-    rows += [("a", 0.1 * i + 1 / 3) for i in range(1, 400)]
-    sdf = spark.createDataFrame(rows, ["k", "value"])
-    got_s = {
-        r.k: r.avg4
-        for r in sdf.groupBy("k").agg(avg4_exact("value").alias("avg4")).collect()
-    }
-    con = duckdb.connect()
-    con.register("t", __import__("pandas").DataFrame(rows, columns=["k", "value"]))
-    expr = AVG4_EXACT_SQL.format(c="value")
-    got_d = dict(con.sql(f"SELECT k, {expr} AS avg4 FROM t GROUP BY k").fetchall())
-    assert got_s == got_d, f"spark={got_s} duckdb={got_d}"
-
-
 def test_custom_operators_handle_empty_inputs(spark):
     """Empty frames flow through every custom operator without error."""
     import pyspark.sql.functions as F
@@ -2334,78 +2297,24 @@ def test_layout_rle_report_layout_tradeoff(spark, sf_dir):
         assert r["n_runs"] >= 1 and r["avg_run_len"] >= 1.0
 
 
-def test_avg4_exact_cross_engine_seeded_fuzz(spark):
-    """Three-way bit-equality fuzz for avg4_exact: Spark, DuckDB, and a
-    pure-Python replay of the same IEEE ops (floor(v*1e6+0.5) per value,
-    one float division, floor-form 4dp round) must agree on every group.
-    The hand-picked boundary test pins the three known divergence modes;
-    this drives ~300 random groups drawn to land on quantization
-    boundaries often (values on the 1e-4 grid, plus raw uniform doubles,
-    plus near-.5 quantization points), so a regression in ANY engine's
-    arithmetic path shows up as a bit flip, not a hash mystery in a
-    driver sweep three rounds later."""
-    import math
-
-    import duckdb
-    import numpy as np
-    import pandas as pd
-
-    from structured_streaming_cassandra_sink_spark.operators.timeseries import (
-        AVG4_EXACT_SQL,
-        avg4_exact,
-    )
-
-    rng = np.random.default_rng(42)
-    rows = []
-    for g in range(300):
-        n = int(rng.integers(1, 60))
-        kind = g % 3
-        if kind == 0:  # 1e-4-grid money-like values: boundary-dense
-            vals = rng.integers(-5_000_000, 5_000_000, n) / 10_000.0
-        elif kind == 1:  # raw uniform doubles
-            vals = rng.uniform(-500.0, 500.0, n)
-        else:  # values engineered near the .5 quantization midpoint
-            vals = (rng.integers(-5_000_000, 5_000_000, n) + 0.5) / 1_000_000.0
-        rows += [(g, float(v)) for v in vals]
-
-    pdf = pd.DataFrame(rows, columns=["k", "value"])
-
-    # pure-Python IEEE replay — the ground truth both engines must hit
-    def ref(vals: list[float]) -> float:
-        q = sum(math.floor(v * 1_000_000 + 0.5) for v in vals)
-        a = q / (len(vals) * 1_000_000.0)
-        return math.floor(a * 10_000 + 0.5) / 10_000.0
-
-    expect = pdf.groupby("k")["value"].apply(lambda s: ref(list(s))).to_dict()
-
-    sdf = spark.createDataFrame(pdf)
-    got_s = {
-        r.k: r.avg4
-        for r in sdf.groupBy("k").agg(avg4_exact("value").alias("avg4")).collect()
-    }
-    con = duckdb.connect()
-    con.register("t", pdf)
-    expr = AVG4_EXACT_SQL.format(c="value")
-    got_d = dict(con.sql(f"SELECT k, {expr} AS avg4 FROM t GROUP BY k").fetchall())
-
-    bad = [
-        k
-        for k in expect
-        if not (got_s[k] == got_d[k] == expect[k])
-    ]
-    assert not bad, f"{len(bad)} groups diverge, e.g. " + ", ".join(
-        f"k={k}: spark={got_s[k]!r} duck={got_d[k]!r} ref={expect[k]!r}"
-        for k in bad[:5]
-    )
-
-
 def test_exactagg_helpers_cross_engine_seeded_fuzz(spark):
-    """Three-way bit-equality fuzz for functions/exactagg.py (the
-    generalization of avg4_exact that the sf1eq sweep drove): sum_exact
-    and avg_exact and their SQL twins and a pure-Python IEEE replay must
-    agree on every group, across the quantization scales the converted
-    queries actually use (q=100 money, q=10^4 products, q=10^6 rates)
-    and output precisions 2/4/6."""
+    """Three-way bit-equality fuzz for functions/exactagg.py: Spark
+    running ``F.expr(sql)``, DuckDB running the same ``sql`` and a
+    pure-Python replay of the same IEEE ops must agree on every group,
+    across the quantization scales the converted queries use (q=100
+    money, q=10^4 products, q=10^6 rates) and output precisions 2/4/6.
+
+    Inputs, each drawn to land on a divergence boundary often:
+    - seed 7: large 2dp money values, binary-inexact 2dp x 2dp products,
+      small rates near the 1e-6 quantization midpoint;
+    - seed 42: values on the 1e-4 grid, raw uniform doubles, and values
+      half-way between 1e-6 grid points;
+    - the three modes the sf0.1 sweep found in the hourly rates: (a) a
+      dense group where float-sum order tips round(avg) by 1 ulp,
+      (b) values whose shortest decimal string is x.5 but whose binary
+      value is below it (Spark round() rounds the string HALF_UP,
+      DuckDB the binary double), and (c) quantized averages landing
+      exactly on .00005."""
     import math
 
     import duckdb
@@ -2413,14 +2322,12 @@ def test_exactagg_helpers_cross_engine_seeded_fuzz(spark):
     import pandas as pd
 
     from structured_streaming_cassandra_sink_spark.functions.exactagg import (
-        avg_exact,
         avg_exact_sql,
-        sum_exact,
         sum_exact_sql,
     )
 
-    rng = np.random.default_rng(7)
     rows = []
+    rng = np.random.default_rng(7)
     for g in range(120):
         n = int(rng.integers(1, 80))
         if g % 3 == 0:  # 2dp money values, large magnitude
@@ -2432,10 +2339,26 @@ def test_exactagg_helpers_cross_engine_seeded_fuzz(spark):
         else:  # small rates near quantization midpoints
             vals = (rng.integers(-5_000_000, 5_000_000, n) + 0.5) / 1_000_000.0
         rows += [(g, float(v)) for v in vals]
+    rng = np.random.default_rng(42)
+    for g in range(1000, 1300):
+        n = int(rng.integers(1, 60))
+        if g % 3 == 0:  # 1e-4-grid money-like values: boundary-dense
+            vals = rng.integers(-5_000_000, 5_000_000, n) / 10_000.0
+        elif g % 3 == 1:  # raw uniform doubles
+            vals = rng.uniform(-500.0, 500.0, n)
+        else:  # values engineered near the .5 quantization midpoint
+            vals = (rng.integers(-5_000_000, 5_000_000, n) + 0.5) / 1_000_000.0
+        rows += [(g, float(v)) for v in vals]
+    # (a) a dense group of awkward floats
+    rows += [(-1, 0.1 * i + 1 / 3) for i in range(1, 400)]
+    # (b) doubles printing as x.5 at the 1e-6 grid but binary-below
+    rows += [(-2, 0.1 + 0.2), (-2, 2.675), (-2, 47.2537499999999994)]
+    # (c) a group of 4 averaging exactly to a .00005 boundary
+    rows += [(-3, 47.2537), (-3, 47.2538), (-3, 47.2537), (-3, 47.2538)]
     pdf = pd.DataFrame(rows, columns=["k", "value"])
 
     CASES = [("sum", 100, 4), ("sum", 10_000, 2), ("avg", 1_000_000, 6),
-             ("avg", 100, 4)]
+             ("avg", 100, 4), ("avg", 1_000_000, 4)]
 
     def ref(vals, kind, q, d):
         s = sum(math.floor(v * q + 0.5) for v in vals)
@@ -2446,11 +2369,10 @@ def test_exactagg_helpers_cross_engine_seeded_fuzz(spark):
     con = duckdb.connect()
     con.register("t", pdf)
     for kind, q, d in CASES:
-        fn = sum_exact if kind == "sum" else avg_exact
         sql = (sum_exact_sql if kind == "sum" else avg_exact_sql)("value", q, d)
         got_s = {
             r.k: r.v
-            for r in sdf.groupBy("k").agg(fn("value", q, d).alias("v")).collect()
+            for r in sdf.groupBy("k").agg(F.expr(sql).alias("v")).collect()
         }
         got_d = dict(con.sql(f"SELECT k, {sql} AS v FROM t GROUP BY k").fetchall())
         expect = pdf.groupby("k")["value"].apply(
@@ -2459,6 +2381,32 @@ def test_exactagg_helpers_cross_engine_seeded_fuzz(spark):
         bad = [k for k in expect if not (got_s[k] == got_d[k] == expect[k])]
         assert not bad, (kind, q, d, bad[:3],
                          [(got_s[k], got_d[k], expect[k]) for k in bad[:3]])
+
+
+def test_exact_aggregates_plan_has_no_decimal(spark, sf_dir):
+    """Spark SQL types a plain literal such as ``100.0`` (qlong_sql,
+    sum_exact_sql) as DECIMAL. Against the DOUBLE columns these queries
+    read, the analyzer casts it to DOUBLE and the optimizer folds the
+    cast, so no Decimal type may survive in the optimized plan: a
+    surviving one means the shared text now runs Decimal arithmetic:
+    slower, and outside the pure-IEEE argument that makes both engines
+    bit-equal."""
+
+    def has_decimal(df) -> bool:
+        plan = df._jdf.queryExecution().optimizedPlan().toJSON()
+        return '"decimal(' in plan
+
+    # control: the probe sees an integral operand keeping the DECIMAL
+    assert has_decimal(spark.range(3).selectExpr("id * 100.0 AS x"))
+    # every query that runs sum_exact_sql / avg_exact_sql / qlong_sql
+    # through F.expr
+    queries = [
+        "groupby_agg", "grouping_sets", "join_skew_salted", "cube_agg",
+        "rollup_agg", "conditional_agg", "cusum_changepoint", "join_asof",
+        "gap_fill", "join_asof_forward", "join_asof_nearest",
+    ]
+    bad = [q for q in queries if has_decimal(registry.QUERIES[q](spark, sf_dir))]
+    assert not bad, bad
 
 
 def test_ln_shared_three_way_bit_equality(spark):
@@ -2489,6 +2437,9 @@ def test_ln_shared_three_way_bit_equality(spark):
         | {2**i + 1 for i in range(1, 62)}
         | {rng.randrange(1, 2**63) for _ in range(300)}
     )
+    for bad in (0, -1):
+        with pytest.raises(ValueError):
+            ln_shared_py(bad)
     expect = {n: ln_shared_py(n) for n in ns}
     for n, v in expect.items():
         if n > 1:
@@ -2520,9 +2471,9 @@ def test_ln_shared_three_way_bit_equality(spark):
 
 
 def test_hilo_sum_adversarial_three_way_fuzz(spark):
-    """Bit-equality fuzz for the r7 hi/lo carrier (hilo_sum_sql /
-    _hilo_sum_col) in the regime the r6 DECIMAL(38,0)/HUGEINT carriers
-    could NOT guarantee: per-row int64 products up to 2^62, mixed signs,
+    """Bit-equality fuzz for the r7 hi/lo carrier (hilo_sum_sql) in the
+    regime the r6 DECIMAL(38,0)/HUGEINT carriers could NOT guarantee:
+    per-row int64 products up to 2^62, mixed signs,
     group sums far past 2^53 (so the final int->double conversions are
     correctly-rounded, not exact). Spark, DuckDB and a pure-Python
     replay of the exact recombination (exact int halves -> float() —

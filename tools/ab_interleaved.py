@@ -31,10 +31,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from structured_streaming_cassandra_sink_spark.session import _local_cores  # noqa: E402
+
 PKG = "structured_streaming_cassandra_sink_spark"
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = str(_local_cores())  # SPARK_GRAFT_CPUS, else the host core count
 
 
 def _load_registry(repo_path: str) -> dict:

@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from structured_streaming_cassandra_sink_spark.session import get_spark
+from structured_streaming_cassandra_sink_spark.session import _local_cores, get_spark
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -175,13 +175,13 @@ def main() -> int:
     if plain:
         # Driver-sim mode (r9): the external driver builds a PLAIN
         # SparkSession — none of get_spark's conf (200 default shuffle
-        # partitions instead of 32 => different partial-agg order, AQE
-        # defaults, no Arrow conf). Any query whose green depends on our
-        # session factory rather than the order-independent contracts
-        # shows up here before it burns a driver slot.
+        # partitions instead of the core count => different partial-agg
+        # order, AQE defaults, no Arrow conf). Any query whose green
+        # depends on our session factory rather than the order-independent
+        # contracts shows up here before it burns a driver slot.
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[32]").getOrCreate()
+        spark = SparkSession.builder.master(f"local[{_local_cores()}]").getOrCreate()
         spark.sparkContext.setLogLevel("ERROR")
     else:
         spark = get_spark(app_name="check")
