@@ -76,12 +76,15 @@ def _ambient_sample(prev: tuple[int, int, int] | None) -> tuple[dict, tuple | No
     return rec, cur
 
 
-def main() -> int:
+def bench_session(app_name: str):
+    """The measuring session: every timing tool (this bench,
+    tools/ab_interleaved.py, tools/profile_queries.py) runs under this
+    one conf, so their numbers are comparable."""
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("structured-streaming-cassandra-sink-spark-bench")
+        .appName(app_name)
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -91,6 +94,11 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main() -> int:
+    spark = bench_session("structured-streaming-cassandra-sink-spark-bench")
 
     import __spark_entry__ as entrymod
 

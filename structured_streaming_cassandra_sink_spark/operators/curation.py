@@ -1007,11 +1007,12 @@ def right_to_erasure_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the deletion list broadcasts against ONE scan each for the
     keep (anti join) and audit (semi join) sides — the fact table never
     shuffles for either; both joins prune to the key column before
-    anything wide moves. At 100 TB pair this with the manifest sink:
-    the retained table is a new committed version, the audit row is the
-    log entry, and old versions age out by retention policy (erasure
-    becomes effective when the last retaining snapshot is GC'd —
-    exactly how Delta/Iceberg vacuum interacts with GDPR)."""
+    anything wide moves. At 100 TB pair this with a versioned table
+    format (Delta/Iceberg): the retained table is a new committed
+    version, the audit row is the log entry, and old versions age out by
+    retention policy (erasure becomes effective when the last retaining
+    snapshot is GC'd — exactly how Delta/Iceberg vacuum interacts with
+    GDPR)."""
     e = load_table(spark, "events", sf_dir)
     del_list = (
         e.filter(F.col("user_id") % 53 == 7).select("user_id").distinct()

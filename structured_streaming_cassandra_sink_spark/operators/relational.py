@@ -14,13 +14,15 @@ Scale notes per operator are inline; the common rules:
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import ts_millis
 from ..functions.exactagg import avg_exact_sql, sum_exact_sql
 from ..plans.registry import query
-from ..sources import load_table
+from ..sources import load_table, prefix_scan
 
 
 # ---------------------------------------------------------------------------
@@ -1419,8 +1421,8 @@ def aqp_sampled_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation: diff two table versions by key into
     added / removed / changed rows — the audit op behind CDC validation,
-    backfill verification, and manifest-version comparison (pair with
-    read_manifest_table(version=N)). The two versions here are derived
+    backfill verification, and comparison of two table snapshots (e.g.
+    two Delta/Iceberg versions). The two versions here are derived
     deterministically from orders (keys dropped from each side, a price
     restatement on one) so the oracle sees identical inputs.
 
@@ -1722,23 +1724,9 @@ def surrogate_key_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window at any scale; cost is one range exchange
     plus a |partitions|-row driver collect."""
     d = load_table(spark, "documents", sf_dir)
-    n = spark.sparkContext.defaultParallelism
-    ranged = d.select("doc_id", "source").repartitionByRange(
-        n, F.col("source"), F.col("doc_id")
-    ).withColumn("__pid", F.spark_partition_id())
-    ranged = ranged.localCheckpoint(eager=False)  # pin partitioning: the groupBy('__pid') collect right below MUST
-    # stay the FIRST action and aggregate every partition — eager=False
-    # materializes on first use, and a partial action (limit/sample)
-    # would let pass 2 recompute the nondeterministic repartition with
-    # different partition ids
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    offsets, acc = {}, 0
-    for pid, c in sorted((r["__pid"], r["c"]) for r in counts):
-        offsets[pid] = acc
-        acc += c
-    offset_col = F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-        F.col("__pid"),
+    ranged, offset_col = prefix_scan(
+        d.select("doc_id", "source"), ["source", "doc_id"],
+        F.count(F.lit(1)), operator.add, 0,
     )
     w = Window.partitionBy("__pid").orderBy("source", "doc_id")
     return ranged.select(

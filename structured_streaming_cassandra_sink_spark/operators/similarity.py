@@ -183,17 +183,17 @@ def _atomic_publish(tmp_dir: str, final_dir: str) -> None:
     writes — a concurrent probe that lists the dir in that window sees
     an empty/partial index and dies with UNABLE_TO_INFER_SCHEMA. A
     rename PAIR (final→trash, tmp→final) still has a gap where the path
-    does not exist. The gapless form is the manifest-sink idiom: the
+    does not exist. The gapless form is a publish-by-pointer: the
     published path is a SYMLINK; each build lands in an immutable
     ``.pub-*`` sibling and one `os.rename` of a pre-made symlink flips
     the pointer — readers either resolve the old version or the new
     one, never nothing. (On an object store this maps to the usual
     publish-by-pointer manifest commit.)
 
-    Retention mirrors the manifest sink: the previous version's dir
-    survives one more publish, so a reader that resolved the pointer
-    just before the swap can finish its scan; older ``.pub-*`` dirs are
-    GC'd. In-flight ``.build-*`` dirs are never touched."""
+    Retention: the previous version's dir survives one more publish, so
+    a reader that resolved the pointer just before the swap can finish
+    its scan; older ``.pub-*`` dirs are GC'd. In-flight ``.build-*``
+    dirs are never touched."""
     import os
     import shutil
     import uuid

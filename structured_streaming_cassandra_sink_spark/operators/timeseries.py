@@ -17,13 +17,15 @@ first), matching DuckDB's `ASOF JOIN ... ON l.ts >= r.ts` oracle.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import ts_micros
 from ..functions.exactagg import avg_exact_sql, fgrid_sql, hilo_sum_sql, qlong_sql
 from ..plans.registry import query
-from ..sources import load_table, spread
+from ..sources import load_table, prefix_scan, spread
 
 
 # Hourly average rate shared by the as-of joins and gap_fill: the exact
@@ -186,8 +188,7 @@ def join_interval_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def running_total(
-    df: DataFrame, order_col: str, value_col: str, out_col: str = "running_total",
-    num_partitions: int | None = None,
+    df: DataFrame, order_col: str, value_col: str, out_col: str = "running_total"
 ) -> DataFrame:
     """Distributed prefix sum: running total of ``value_col`` in global
     ``order_col`` order WITHOUT a single-partition window.
@@ -198,31 +199,8 @@ def running_total(
     ``Window.orderBy(order_col)`` — which Spark executes on ONE partition
     and therefore cannot scale — at the cost of one range exchange and a
     tiny driver collect of per-partition subtotals."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n, F.col(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    ranged = ranged.localCheckpoint(eager=False)  # pin partitioning: the groupBy('__pid') collect right below MUST
-    # stay the FIRST action and aggregate every partition — eager=False
-    # materializes on first use, and a partial action (limit/sample)
-    # would let pass 2 recompute the nondeterministic repartition with
-    # different partition ids
-    subtotals = (
-        ranged.groupBy("__pid").agg(F.sum(value_col).alias("__psum")).collect()
-    )
-    totals = sorted((r["__pid"], r["__psum"] or 0) for r in subtotals)
-    offsets, acc = {}, 0
-    for pid, psum in totals:
-        offsets[pid] = acc
-        acc += psum
-    offset_col = F.element_at(
-        F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        ),
-        F.col("__pid"),
+    ranged, offset_col = prefix_scan(
+        df, [order_col], F.sum(value_col), operator.add, 0
     )
     w = (
         Window.partitionBy("__pid")
@@ -2913,31 +2891,9 @@ def late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         % LATE_JITTER_US
     )
     e = e.withColumn("aj", ts_us + jitter)
-    n = spark.sparkContext.defaultParallelism
-    ranged = e.repartitionByRange(n, F.col("aj"), F.col("event_id")).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    ranged = ranged.localCheckpoint(eager=False)  # pin partitioning: the groupBy('__pid') collect right below MUST
-    # stay the FIRST action and aggregate every partition — eager=False
-    # materializes on first use, and a partial action (limit/sample)
-    # would let pass 2 recompute the nondeterministic repartition with
-    # different partition ids
-    # pass 1: per-partition event-time maxima in micros (tiny driver collect)
-    subs = sorted(
-        (r["__pid"], r["__mx"])
-        for r in ranged.groupBy("__pid")
-        .agg(F.max(ts_micros("ts")).alias("__mx"))
-        .collect()
-    )
-    offsets, run = {}, None
-    for pid, mx in subs:
-        offsets[pid] = -(2**62) if run is None else run
-        run = mx if run is None or mx > run else run
-    off_us = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-        ),
-        F.col("__pid"),
+    # pass 1: prefix maxima of per-partition event-time maxima, in micros
+    ranged, off_us = prefix_scan(
+        e, ["aj", "event_id"], F.max(ts_micros("ts")), max, -(2**62)
     )
     w = (
         Window.partitionBy("__pid")

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions import ts_micros
 from ..functions.exactagg import fgrid_sql, qlong_sql
 from ..plans.registry import query
-from ..sources import load_table
+from ..sources import load_table, prefix_scan
 
 
 @query(
@@ -695,27 +695,8 @@ def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_size").cast("long").alias("size"),
     )
     gp = pts.groupBy("price").agg(F.max("size").alias("m_eq"))
-    n = spark.sparkContext.defaultParallelism
-    ranged = (
-        gp.repartitionByRange(n, F.col("price"))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-        # pin partitioning: the groupBy('__pid') collect right below MUST
-        # stay the FIRST action and aggregate every partition — eager=False
-        # materializes on first use, and a partial action (limit/sample)
-        # would let pass 2 recompute the nondeterministic repartition with
-        # different partition ids
-    )
     SENT = -(1 << 62)
-    subtot = ranged.groupBy("__pid").agg(F.max("m_eq").alias("pm")).collect()
-    offsets, acc = {}, SENT
-    for pid, pm in sorted((r["__pid"], r["pm"]) for r in subtot):
-        offsets[pid] = acc
-        acc = max(acc, pm)
-    off = F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-        F.col("__pid"),
-    )
+    ranged, off = prefix_scan(gp, ["price"], F.max("m_eq"), max, SENT)
     w_run = (
         Window.partitionBy("__pid")
         .orderBy("price")

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import TABLES
 
@@ -40,8 +41,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         # spark.sql.legacy.parquet.nanosAsLong it arrives as long nanos.
         # Integer `div` (not `/`): nanos ~1.7e18 exceed double's 2^53
         # exact-integer range, float division would corrupt microseconds.
-        from pyspark.sql import functions as F
-
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return _normalize_timestamps(df, TABLES[name])
@@ -59,7 +58,6 @@ def _normalize_timestamps(df: DataFrame, declared) -> DataFrame:
     instant-preserving. On the expected path (file already NTZ) no cast
     is inserted, so parquet filter pushdown is untouched.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     actual = {f.name: f.dataType for f in df.schema.fields}
@@ -102,6 +100,44 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def prefix_scan(
+    df: DataFrame, order_cols: list[str], agg: Column, combine, start
+) -> tuple[DataFrame, Column]:
+    """Pass 1 of the distributed two-pass prefix scan (running sum, max,
+    row number in a GLOBAL order without a single-partition window).
+
+    Range-partitions ``df`` by ``order_cols`` into defaultParallelism
+    partitions and tags each row with its partition id ``__pid``,
+    collects ``agg`` per partition (a |partitions|-row driver collect),
+    and folds the results in partition order with ``combine`` from
+    ``start``. Returns ``(ranged, offset)``: ``offset`` is the fold over
+    all EARLIER partitions, per row. The caller runs its own window
+    ``partitionBy("__pid").orderBy(*order_cols)`` on ``ranged`` and
+    combines it with ``offset``. A null partition aggregate is skipped,
+    so a null partial sum counts as 0."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols]).withColumn(
+        "__pid", F.spark_partition_id()
+    )
+    # pin partitioning: the groupBy('__pid') collect right below MUST
+    # stay the FIRST action and aggregate every partition — eager=False
+    # materializes on first use, and a partial action (limit/sample)
+    # would let pass 2 recompute the nondeterministic repartition with
+    # different partition ids
+    ranged = ranged.localCheckpoint(eager=False)
+    parts = ranged.groupBy("__pid").agg(agg.alias("__part")).collect()
+    offsets, acc = {}, start
+    for pid, part in sorted((r["__pid"], r["__part"]) for r in parts):
+        offsets[pid] = acc
+        if part is not None:
+            acc = combine(acc, part)
+    offset = F.element_at(
+        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
+        F.col("__pid"),
+    )
+    return ranged, offset
 
 
 def table_rowcount(name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:

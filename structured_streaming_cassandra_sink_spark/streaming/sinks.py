@@ -10,12 +10,13 @@ per partition-batch instead of per row, and epoch-tagged for replay
 idempotence.
 
 Backends:
-- ``parquet_upsert_sink`` — local twin with the SAME upsert-by-key end
-  state as the reference's Cassandra PK table (:71-79): MERGE emulated as
-  one pass — latest-per-key over (existing state ∪ micro-batch), then an
-  atomic swap. Each epoch still costs O(state): one shuffle of state ∪
-  batch and a full rewrite of the table.
-- ``manifest_merge_sink`` — the same merge, published by a manifest-log commit.
+- ``parquet_upsert_sink`` — the one MERGE sink: a local twin with the
+  SAME upsert-by-key end state as the reference's Cassandra PK table
+  (:71-79). MERGE is emulated as one pass — latest-per-key over
+  (existing state ∪ micro-batch), then a rename swap. Each epoch still
+  costs O(state): one shuffle of state ∪ batch and a full rewrite of the
+  table. Replay safety comes from the merge being idempotent, not from a
+  commit log: re-applying a committed epoch leaves the same end state.
 - ``parquet_append_sink`` — plain append (for append-semantics queries).
 - ``cassandra_upsert_sink`` — production path via the Spark Cassandra
   Connector (DataSourceV2); Cassandra writes are natively upserts, so the
@@ -25,7 +26,6 @@ Backends:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -87,7 +87,7 @@ def _recover_upsert_dir(path: str) -> None:
 
 
 def _state_merger(key: str, order: list[str]):
-    """Both upsert sinks' merge: ``merge(batch, state_dir)`` is ONE
+    """The upsert sink's merge: ``merge(batch, state_dir)`` is ONE
     latest-per-key over state ∪ raw batch (idempotence makes a batch
     dedup of its own redundant), or over the batch alone when there is
     no state. The state is read with the batch's schema (by column
@@ -134,6 +134,12 @@ def parquet_upsert_sink(path: str, key: str, order: list[str]):
     current → ``__old``, ``__next`` → current, delete ``__old``. Every
     crash window leaves either the old state, or a complete ``__next``
     that :func:`_recover_upsert_dir` adopts on the next epoch.
+
+    Readers: between the two renames there is briefly no table at
+    ``path``, so read it only while no epoch is committing — after
+    ``processAllAvailable()`` or ``stop()``, as every caller in this
+    package does. A reader running concurrently with a commit may find
+    the directory missing.
 
     Scale note: at 100 TB this becomes Delta/Iceberg MERGE INTO or the
     Cassandra connector below — the read-union-rewrite here is the
@@ -198,125 +204,3 @@ def start_to_sink(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# Manifest-log MERGE sink — the transaction-log commit protocol
-# (Delta/Iceberg idiom) in dependency-free form.
-# ---------------------------------------------------------------------------
-def _manifest_log_dir(path: str) -> str:
-    return os.path.join(path, "_log")
-
-
-def _read_manifest(path: str, version: int) -> dict:
-    with open(os.path.join(_manifest_log_dir(path), f"{int(version)}.json")) as fh:
-        return json.load(fh)
-
-
-def _manifest_latest(path: str) -> dict | None:
-    """Highest committed manifest, or None."""
-    versions = manifest_versions(path)
-    return _read_manifest(path, versions[-1]) if versions else None
-
-
-def manifest_versions(path: str) -> list[int]:
-    """All committed version numbers, ascending. Only ``<int>.json``
-    log entries count — tmp files from a crashed commit are invisible."""
-    log = _manifest_log_dir(path)
-    if not os.path.isdir(log):
-        return []
-    return sorted(
-        int(f[: -len(".json")])
-        for f in os.listdir(log)
-        if f.endswith(".json") and f[: -len(".json")].isdigit()
-    )
-
-
-def read_manifest_table(spark, path: str, version: int | None = None):
-    """Snapshot read: resolve a committed version from the log and read
-    exactly its file set. ``version=None`` reads the CURRENT version;
-    passing an older committed version is TIME TRAVEL — every version's
-    data dir is immutable once its manifest commits (the sink writes
-    ``data/v{N}`` fresh and never mutates a published one), so an old
-    snapshot is byte-identical to what a reader saw at its commit
-    instant. Uncommitted/orphaned data dirs are invisible either way —
-    this is what makes the sink's crash window harmless."""
-    versions = manifest_versions(path)
-    if version is None and versions:
-        version = versions[-1]
-    if version is None or int(version) not in versions:
-        raise FileNotFoundError(f"version {version} not committed under {path}; have {versions}")
-    return spark.read.parquet(os.path.join(path, _read_manifest(path, version)["data_dir"]))
-
-
-def manifest_merge_sink(path: str, key: str, order: list[str], retain: int | None = 2):
-    """MERGE-by-key sink committed through a transaction log — the
-    production idiom (Delta/Iceberg MERGE INTO) expressed with plain
-    parquet + an atomic manifest rename, no library needed:
-
-    1. resolve current version V from ``_log/`` (highest ``N.json``);
-    2. replay guard: if V's manifest already records this epoch, the
-       epoch was fully committed before a restart — skip (exactly-once);
-    3. write the merged table to a fresh IMMUTABLE data dir
-       ``data/v{V+1}-e{epoch}`` (never mutates the current version);
-    4. COMMIT = write ``_log/.tmp-*`` then os.rename to
-       ``_log/{V+1}.json`` — one atomic filesystem op is the only
-       publish point;
-    5. GC superseded data dirs, keeping the newest ``retain`` versions
-       (default 2 = current + immediately-previous): an in-flight reader
-       pinned to version V survives the commit of V+1 (its files outlive
-       the scan). ``retain=None`` keeps every version — full time-travel
-       history; any committed version stays readable via
-       ``read_manifest_table(spark, path, version=N)``. 2 is the minimal
-       retention that honors the concurrent-reader claim below; a
-       production deployment sets this from its snapshot-isolation /
-       time-travel policy (Delta's ``delta.deletedFileRetentionDuration``
-       analog, expressed in versions).
-
-    Every crash window is safe: die before the rename and readers still
-    see version V (the orphan data dir is invisible and re-used by the
-    replay); die after and the epoch is committed, so the replay hits
-    the guard in step 2. Unlike ``parquet_upsert_sink`` the current
-    state is NEVER renamed away — readers can run concurrently with a
-    commit."""
-    merge = _state_merger(key, order)
-
-    def write(df: DataFrame, epoch_id: int) -> None:
-        m = _manifest_latest(path)
-        if m is not None and int(m["epoch_id"]) == int(epoch_id):
-            return  # replayed epoch already fully committed
-        version = 0 if m is None else int(m["version"]) + 1
-        merged = merge(df, None if m is None else os.path.join(path, m["data_dir"]))
-        data_dir = os.path.join("data", f"v{version}-e{epoch_id}")
-        merged.write.mode("overwrite").parquet(os.path.join(path, data_dir))
-        log = _manifest_log_dir(path)
-        os.makedirs(log, exist_ok=True)
-        tmp = os.path.join(log, f".tmp-{version}-{epoch_id}.json")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"version": version, "epoch_id": int(epoch_id), "data_dir": data_dir},
-                fh,
-            )
-        os.rename(tmp, os.path.join(log, f"{version}.json"))  # the commit
-        # GC: keep the newest `retain` versions' data dirs (and their
-        # manifests — a log entry must never outlive its files). Keeping
-        # at least v-1 means a reader that resolved the manifest just
-        # before this commit can still finish scanning its pinned dir.
-        if retain is None:
-            return
-        versions = manifest_versions(path)
-        keep_versions = set(versions[-max(int(retain), 2):])
-        keep_dirs = {_read_manifest(path, v)["data_dir"] for v in keep_versions}
-        # manifests BEFORE data dirs: a log entry must never outlive its
-        # files, so if we crash mid-GC the worst case is an orphan data
-        # dir (invisible, harmless), never a manifest pointing at
-        # deleted files.
-        for v in versions:
-            if v not in keep_versions:
-                os.remove(os.path.join(log, f"{v}.json"))
-        droot = os.path.join(path, "data")
-        for d in os.listdir(droot):
-            if os.path.join("data", d) not in keep_dirs:
-                shutil.rmtree(os.path.join(droot, d), ignore_errors=True)
-
-    return write

@@ -93,6 +93,16 @@ def events_to_messages(events: DataFrame, records_per_message: int = 3) -> DataF
     )
 
 
+def _message_lines(messages: DataFrame) -> DataFrame:
+    """cast -> explode(split('\\n')) -> drop empty lines: the one
+    line-split both parse chains share, as a single ``line`` column."""
+    return (
+        messages.select(F.col("value").cast("string").alias("value"))
+        .select(F.explode(F.split(F.col("value"), "\n")).alias("line"))
+        .filter(F.col("line") != "")
+    )
+
+
 def parse_message_stream_with_quarantine(
     messages: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
@@ -106,12 +116,7 @@ def parse_message_stream_with_quarantine(
     quarantine side keeps the raw line for replay/debugging — route it to
     a dead-letter sink in production. Both are lazy projections of one
     parse; Catalyst computes from_json once per branch, map-side."""
-    lines = (
-        messages.select(F.col("value").cast("string").alias("value"))
-        .select(F.explode(F.split(F.col("value"), "\n")).alias("line"))
-        .filter(F.col("line") != "")
-    )
-    parsed = lines.select(
+    parsed = _message_lines(messages).select(
         "line",
         F.from_json(F.col("line"), EVENT_WIRE, _JSON_OPTS).alias(
             "data"
@@ -136,9 +141,7 @@ def parse_message_stream(
     chain, so split pattern / empty-line policy / timestamp options
     can't drift between pipelines."""
     return (
-        messages.select(F.col("value").cast("string").alias("value"))
-        .select(F.explode(F.split(F.col("value"), "\n")).alias("line"))
-        .filter(F.col("line") != "")
+        _message_lines(messages)
         .select(
             F.from_json(
                 F.col("line"), schema, _JSON_OPTS if options is None else options

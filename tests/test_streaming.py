@@ -134,8 +134,9 @@ def test_streaming_flagship_converges_to_batch(spark, sf_dir, message_dir, tmp_p
 
 
 def test_streaming_flagship_restart_idempotent(spark, sf_dir, message_dir, tmp_path):
-    """Stop mid-stream, restart from the checkpoint: the sink's end state
-    equals the batch result — replayed epochs don't corrupt it (the
+    """Restart from the checkpoint with the last epoch's commit removed,
+    so the engine re-delivers an epoch whose MERGE already reached the
+    sink: the sink's end state still equals the batch result (the
     engine's version of the reference's PK-upsert replay safety, :19-23)."""
     sink_dir = str(tmp_path / "sink2")
     ckpt = str(tmp_path / "ckpt2")
@@ -144,14 +145,22 @@ def test_streaming_flagship_restart_idempotent(spark, sf_dir, message_dir, tmp_p
         q.processAllAvailable()
     finally:
         q.stop()
-    # restart with the same checkpoint — remaining files (if any) process;
-    # re-delivery of the last committed epoch must not change the state
+    # a crash after the sink wrote but before the commit log entry landed
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
     q2 = streaming_flagship(spark, message_dir, sink_dir, ckpt, max_files_per_trigger=3)
     try:
         q2.processAllAvailable()
+        replayed = [p for p in q2.recentProgress if p.get("numInputRows", 0) > 0]
     finally:
         q2.stop()
-    got = {r.user_id: (r.ts, r.event_id) for r in spark.read.parquet(sink_dir).collect()}
+    assert replayed, "the restart must re-deliver the uncommitted epoch"
+    rows = spark.read.parquet(sink_dir).collect()
+    got = {r.user_id: (r.ts, r.event_id) for r in rows}
+    assert len(rows) == len(got), "the replayed epoch duplicated keys"
     batch = latest_per_key(
         transform_events(load_table(spark, "events", sf_dir)), "user_id", ["ts", "event_id"]
     )
@@ -897,7 +906,7 @@ def test_upsert_sink_crash_recovery(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("which", ["parquet_upsert_sink", "manifest_merge_sink"])
+@pytest.mark.parametrize("which", ["parquet_upsert_sink"])
 def test_upsert_sink_schema_drift_raises(spark, tmp_path, which):
     """The state is read with the micro-batch's schema, so a state column
     the batch lacks (or a batch column the state lacks) would vanish
@@ -916,10 +925,7 @@ def test_upsert_sink_schema_drift_raises(spark, tmp_path, which):
     ):
         with pytest.raises(ValueError, match="columns"):
             make(path, key="k", order=["v"])(batch, 1)
-    read = spark.read.parquet if which == "parquet_upsert_sink" else (
-        lambda p: sinks.read_manifest_table(spark, p)
-    )
-    assert [tuple(r) for r in read(path).collect()] == [(1, 10, "a")]
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, 10, "a")]
 
 
 def test_upsert_sink_merges_reordered_foreign_state(spark, tmp_path):
@@ -1062,95 +1068,6 @@ def test_rate_limit_bounds_micro_batches(spark, message_dir):
         for r in tumbling_agg(_batch_parsed(spark, message_dir)).collect()
     }
     assert got == want
-
-
-def test_manifest_merge_sink_converges_and_replays(spark, sf_dir, message_dir, tmp_path):
-    """Log-committed MERGE sink: streaming end state == batch latest-per-
-    key; re-delivering the last epoch hits the replay guard (version
-    count unchanged, state unchanged)."""
-    from structured_streaming_cassandra_sink_spark.streaming.sinks import (
-        manifest_merge_sink,
-        read_manifest_table,
-        start_to_sink,
-        _manifest_latest,
-    )
-    from structured_streaming_cassandra_sink_spark.streaming.sources import (
-        file_message_stream,
-        parse_message_stream,
-    )
-
-    table = str(tmp_path / "mm_table")
-    ckpt = str(tmp_path / "mm_ckpt")
-    sink = manifest_merge_sink(table, "user_id", ["ts", "event_id"])
-    parsed = parse_message_stream(
-        file_message_stream(spark, message_dir, max_files_per_trigger=1)
-    ).select("user_id", "ts", "event_id")
-    q = start_to_sink(parsed, sink, ckpt, query_name="t_manifest")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        r.user_id: (r.ts, r.event_id) for r in read_manifest_table(spark, table).collect()
-    }
-    batch = latest_per_key(
-        _batch_parsed(spark, message_dir).select("user_id", "ts", "event_id"),
-        "user_id",
-        ["ts", "event_id"],
-    )
-    want = {r.user_id: (r.ts, r.event_id) for r in batch.collect()}
-    assert got == want
-
-    # replay the last committed epoch by hand: guard must no-op
-    m_before = _manifest_latest(table)
-    last_batch = read_manifest_table(spark, table).limit(5)
-    sink(last_batch, m_before["epoch_id"])
-    m_after = _manifest_latest(table)
-    assert m_after["version"] == m_before["version"]
-    assert {
-        r.user_id: (r.ts, r.event_id) for r in read_manifest_table(spark, table).collect()
-    } == want
-
-
-def test_manifest_merge_sink_crash_before_commit(spark, sf_dir, tmp_path):
-    """Die AFTER the data write but BEFORE the manifest rename: readers
-    still see the previous version (orphan dir invisible); replaying the
-    epoch completes the commit and converges."""
-    import json
-    import os
-
-    from structured_streaming_cassandra_sink_spark.streaming.sinks import (
-        manifest_merge_sink,
-        read_manifest_table,
-        _manifest_latest,
-    )
-
-    table = str(tmp_path / "mc_table")
-    sink = manifest_merge_sink(table, "k", ["v"])
-    df1 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    sink(df1, 0)
-    assert {r.k: r.v for r in read_manifest_table(spark, table).collect()} == {1: 10, 2: 20}
-
-    # epoch 1 "crashes": data dir + tmp manifest exist, no commit
-    df2 = spark.createDataFrame([(2, 21), (3, 30)], "k int, v int")
-    orphan = os.path.join(table, "data", "v1-e1")
-    df2.write.mode("overwrite").parquet(orphan)
-    with open(os.path.join(table, "_log", ".tmp-1-1.json"), "w") as fh:
-        json.dump({"version": 1, "epoch_id": 1, "data_dir": "data/v1-e1"}, fh)
-
-    # reader is oblivious to the crash leftovers
-    assert _manifest_latest(table)["version"] == 0
-    assert {r.k: r.v for r in read_manifest_table(spark, table).collect()} == {1: 10, 2: 20}
-
-    # replay epoch 1: overwrites the orphan, commits, merges correctly
-    sink(df2, 1)
-    assert _manifest_latest(table)["version"] == 1
-    assert {r.k: r.v for r in read_manifest_table(spark, table).collect()} == {
-        1: 10,
-        2: 21,
-        3: 30,
-    }
 
 
 @pytest.fixture(scope="module")
@@ -1827,55 +1744,6 @@ def test_stateful_ops_survive_malformed_record(spark, tmp_path):
         q.stop()
 
 
-def test_manifest_time_travel_reads_old_snapshot(spark, message_dir, tmp_path):
-    """Every committed version stays readable after later merges: the
-    version-1 snapshot read AFTER the stream finishes equals the state
-    captured AT version 1 (immutable data dirs), and version pinning
-    rejects uncommitted numbers."""
-    import pytest as _pytest
-
-    from structured_streaming_cassandra_sink_spark.streaming.sinks import (
-        manifest_merge_sink,
-        manifest_versions,
-        read_manifest_table,
-        start_to_sink,
-    )
-    from structured_streaming_cassandra_sink_spark.streaming.sources import (
-        file_message_stream,
-        parse_message_stream,
-    )
-
-    table = str(tmp_path / "tt_table")
-    ckpt = str(tmp_path / "tt_ckpt")
-    # retain=None: keep every version — the time-travel configuration
-    sink = manifest_merge_sink(table, "user_id", ["ts", "event_id"], retain=None)
-    parsed = parse_message_stream(
-        file_message_stream(spark, message_dir, max_files_per_trigger=1)
-    ).select("user_id", "ts", "event_id")
-    q = start_to_sink(parsed, sink, ckpt, query_name="t_timetravel")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    versions = manifest_versions(table)
-    assert len(versions) >= 2, "need multiple epochs for time travel"
-    v1 = versions[0]
-    old = read_manifest_table(spark, table, version=v1)
-    cur = read_manifest_table(spark, table)
-    # the old snapshot is a strict subset of users (merge only adds or
-    # updates keys) and differs from current (later epochs landed)
-    old_rows = {r.user_id: (r.ts, r.event_id) for r in old.collect()}
-    cur_rows = {r.user_id: (r.ts, r.event_id) for r in cur.collect()}
-    assert set(old_rows) <= set(cur_rows)
-    assert old_rows != cur_rows
-    # a key present in both is at an <= timestamp in the old snapshot
-    for uid, (ts, _) in old_rows.items():
-        assert ts <= cur_rows[uid][0]
-    with _pytest.raises(FileNotFoundError):
-        read_manifest_table(spark, table, version=max(versions) + 1000)
-
-
 def test_streaming_tumbling_distinct_within_hll_band(spark, message_dir):
     """Streaming approx distinct per (window, type) lands within the
     HLL++ default-rsd band (5% at 3 sigma-ish) of the batch EXACT
@@ -1904,43 +1772,6 @@ def test_streaming_tumbling_distinct_within_hll_band(spark, message_dir):
     assert set(got) == set(want)
     for k, exact in want.items():
         assert abs(got[k] - exact) <= max(2, 0.15 * exact), (k, got[k], exact)
-
-
-def test_manifest_gc_log_never_outlives_files(spark, message_dir, tmp_path):
-    """Default retention (2): after the stream, every manifest still in
-    the log points at an existing data dir (log entries must never
-    outlive their files), and only `retain` versions remain."""
-    import json
-    import os
-
-    from structured_streaming_cassandra_sink_spark.streaming.sinks import (
-        _manifest_log_dir,
-        manifest_merge_sink,
-        manifest_versions,
-        start_to_sink,
-    )
-    from structured_streaming_cassandra_sink_spark.streaming.sources import (
-        file_message_stream,
-        parse_message_stream,
-    )
-
-    table = str(tmp_path / "gc_table")
-    sink = manifest_merge_sink(table, "user_id", ["ts", "event_id"])
-    parsed = parse_message_stream(
-        file_message_stream(spark, message_dir, max_files_per_trigger=1)
-    ).select("user_id", "ts", "event_id")
-    q = start_to_sink(parsed, sink, str(tmp_path / "gc_ckpt"), query_name="t_gc")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    versions = manifest_versions(table)
-    assert len(versions) == 2  # retain=2 default
-    for v in versions:
-        with open(os.path.join(_manifest_log_dir(table), f"{v}.json")) as fh:
-            m = json.load(fh)
-        assert os.path.isdir(os.path.join(table, m["data_dir"])), m
 
 
 def test_streaming_enrich_static_equals_batch(spark, sf_dir, message_dir):

@@ -31,12 +31,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from structured_streaming_cassandra_sink_spark.session import _local_cores  # noqa: E402
+from bench import SF_DIR, bench_session  # noqa: E402
 
 PKG = "structured_streaming_cassandra_sink_spark"
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = str(_local_cores())  # SPARK_GRAFT_CPUS, else the host core count
 
 
 def _load_registry(repo_path: str) -> dict:
@@ -83,20 +80,7 @@ def main() -> int:
                   file=sys.stderr)
             return 2
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("ab-interleaved")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("ab-interleaved")
     spark.read.parquet(f"{SF_DIR}/nation.parquet").count()
 
     def timed(fn) -> float:

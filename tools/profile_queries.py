@@ -22,10 +22,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from structured_streaming_cassandra_sink_spark.session import _local_cores  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = str(_local_cores())  # SPARK_GRAFT_CPUS, else the host core count
+from bench import SF_DIR, bench_session  # noqa: E402
 
 
 def _rest(base: str, app: str, path: str):
@@ -34,20 +31,7 @@ def _rest(base: str, app: str, path: str):
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("profile-queries")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("profile-queries")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
 
