@@ -56,6 +56,13 @@ def latest_per_key(df: DataFrame, key: str, order: list[str]) -> DataFrame:
     Deterministic: ties on the primary order column break on the remaining
     columns. One shuffle on ``key``; at scale this beats dropDuplicates
     (which keeps an arbitrary row) and is MERGE-equivalent.
+
+    The ``row_number() == 1`` form is kept on purpose: Spark rewrites it
+    into a partial top-1 per key before the shuffle, which pays when keys
+    repeat, as in the batch queries (``dedup_by_key`` measured slower
+    with the non-rewritten ``lag`` form). The upsert sink merges a
+    key-unique state, where that partial top-1 drops no state row, so
+    it uses the ``lag`` form instead (``streaming.sinks._state_merger``).
     """
     w = Window.partitionBy(key).orderBy(*[F.col(c).desc() for c in order])
     return (

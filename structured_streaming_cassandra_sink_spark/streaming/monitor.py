@@ -2,11 +2,12 @@
 
 The reference's only diagnostics are println calls inside the sink
 (cassandra_sink.scala:21,26,39). The engine replaces that with the
-listener API: per-micro-batch progress (input rate, processed rows,
-batch duration and its phases, state-store size) captured as structured
-records — the numbers an operator pages on at 100 TB (watermark lag,
-state growth, batch duration vs trigger interval). The phases split a
-trigger into source work (``latestOffset``, ``getBatch``), planning
+listener API: per-micro-batch progress (input and processing rates,
+processed rows, batch duration and its phases, event-time watermark,
+state-store rows and memory) captured as structured records — the
+numbers an operator pages on at 100 TB (watermark lag, state growth,
+batch duration vs trigger interval). The phases split a trigger into
+source work (``latestOffset``, ``getBatch``), planning
 (``queryPlanning``), the sink (``addBatch``) and the offset/commit log
 writes (``walCommit``, ``commitOffsets``), so a sink's share of each
 batch is on record without the Spark UI.
@@ -29,6 +30,13 @@ class BatchMetrics:
     state_rows: int | None
     # every ``durationMs`` entry of the progress report, by phase name
     phases_ms: dict[str, int] = field(default_factory=dict)
+    # rates over the trigger; Spark omits a rate it cannot compute (NaN)
+    input_rows_per_s: float | None = None
+    processed_rows_per_s: float | None = None
+    # event-time watermark (ISO-8601 UTC), None before the first one
+    watermark: str | None = None
+    # summed over all stateful operators, like ``state_rows``
+    state_memory_bytes: int | None = None
 
 
 @dataclass
@@ -59,6 +67,12 @@ class MetricsCollector(StreamingQueryListener):
                 if state
                 else None,
                 phases_ms=phases,
+                input_rows_per_s=p.get("inputRowsPerSecond"),
+                processed_rows_per_s=p.get("processedRowsPerSecond"),
+                watermark=(p.get("eventTime") or {}).get("watermark"),
+                state_memory_bytes=sum(op.get("memoryUsedBytes", 0) for op in state)
+                if state
+                else None,
             )
         )
 

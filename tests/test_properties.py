@@ -95,6 +95,59 @@ def test_latest_per_key_idempotent_property(spark, rows):
     assert len(got_once) == len({u for _, _, u, _, _, _ in data})
 
 
+@SPARK_SETTINGS
+@given(
+    state=st.dictionaries(                            # key -> (ts, payload)
+        st.integers(min_value=0, max_value=12),
+        st.tuples(st.integers(min_value=0, max_value=4), st.text(max_size=3)),
+        min_size=1,
+        max_size=10,
+    ),
+    fresh=st.lists(                                   # (key, ts, payload); keys repeat
+        st.tuples(
+            st.integers(min_value=0, max_value=15),
+            st.integers(min_value=0, max_value=4),    # small ts grid: ties on ts
+            st.text(max_size=3),
+        ),
+        min_size=1,
+        max_size=16,
+    ),
+    replays=st.lists(st.integers(min_value=0, max_value=9), max_size=4),
+)
+def test_upsert_merge_equals_latest_per_key_property(spark, tmp_path_factory, state, fresh,
+                                                     replays):
+    """The upsert sink's merge over a key-unique state == latest_per_key
+    over state ∪ batch, row for row, when batch keys repeat, some batch
+    rows replay state rows verbatim, and ts ties break on event_id; with
+    no state it == latest_per_key over the batch alone."""
+    import os
+
+    from structured_streaming_cassandra_sink_spark.plans.flagship import latest_per_key
+    from structured_streaming_cassandra_sink_spark.streaming.sinks import _state_merger
+
+    schema = "k int, ts int, event_id int, payload string"
+    state_rows = [(k, ts, i, pl) for i, (k, (ts, pl)) in enumerate(sorted(state.items()))]
+    batch_rows = [(k, ts, len(state_rows) + i, pl) for i, (k, ts, pl) in enumerate(fresh)]
+    batch_rows += [state_rows[i % len(state_rows)] for i in replays]
+    state_dir = os.path.join(str(tmp_path_factory.mktemp("upsert")), "state")
+    spark.createDataFrame(state_rows, schema).write.parquet(state_dir)
+    batch = spark.createDataFrame(batch_rows, schema)
+
+    order = ["ts", "event_id"]
+    merge = _state_merger("k", order)
+    first = sorted(tuple(r) for r in merge(batch, None).collect())
+    assert first == sorted(tuple(r) for r in latest_per_key(batch, "k", order).collect())
+    got = sorted(tuple(r) for r in merge(batch, state_dir).collect())
+    union = spark.read.parquet(state_dir).unionByName(batch)
+    want = sorted(tuple(r) for r in latest_per_key(union, "k", order).collect())
+    assert got == want
+    latest = {}
+    for row in state_rows + batch_rows:
+        if row[0] not in latest or row[1:3] > latest[row[0]][1:3]:
+            latest[row[0]] = row
+    assert got == sorted(latest.values())
+
+
 def _union_find_components(edges):
     parent = {}
 

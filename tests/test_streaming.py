@@ -432,6 +432,13 @@ def test_metrics_listener_captures_progress(spark, sf_dir, message_dir):
                           "walCommit", "commitOffsets"):
                 assert 0 <= b.phases_ms[phase] <= b.duration_ms, (phase, b.phases_ms)
             assert b.phases_ms["triggerExecution"] == b.duration_ms
+            # rates, watermark and state memory of every fed batch
+            assert b.processed_rows_per_s > 0
+            assert b.input_rows_per_s is None or b.input_rows_per_s >= 0
+            assert b.watermark is not None
+            assert b.state_memory_bytes > 0
+        marks = [b.watermark for b in fed]
+        assert marks == sorted(marks), "the event-time watermark never goes back"
     finally:
         spark.streams.removeListener(collector)
 
@@ -963,9 +970,15 @@ def test_upsert_sink_merges_reordered_foreign_state(spark, tmp_path):
 
 
 def test_upsert_sink_one_pass_plan(spark, tmp_path):
-    """After the first epoch, an epoch over existing state is one pass:
-    at most 2 Spark jobs (the shuffle map stage and the write) and one
-    Exchange on the key — no batch-only dedup, no schema-inference job."""
+    """Every epoch over existing state is one pass: at most 2 Spark jobs
+    (the shuffle map stage and the write), one Exchange on the key and
+    one Sort — no batch-only dedup, no schema-inference job (the first
+    such epoch's column check reads a parquet footer), no partial top-1.
+    The written state has no dictionary-encoded column chunk."""
+    import glob
+
+    import pyarrow.parquet as pq
+
     from structured_streaming_cassandra_sink_spark.streaming.sinks import (
         _state_merger,
         parquet_upsert_sink,
@@ -975,26 +988,41 @@ def test_upsert_sink_one_pass_plan(spark, tmp_path):
     path = str(tmp_path / "one_pass")
     sink = parquet_upsert_sink(path, key="k", order=["v"])
 
-    def batch(e):
-        return spark.createDataFrame([(i, 10 * e + i) for i in range(e, 20)], "k int, v int")
+    def batch(e):  # g repeats, so a dictionary-encoding writer would pick it
+        return spark.createDataFrame(
+            [(i, 10 * e + i, i % 2) for i in range(e, 20)], "k int, v int, g int"
+        )
+
+    def jobs_of(epoch):
+        group, outer = f"t_upsert_one_pass_{epoch}", sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            sink(batch(epoch), epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     sink(batch(0), 0)
-    sink(batch(1), 1)  # first epoch over a state: the one column check
-    group, outer = "t_upsert_one_pass", sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        sink(batch(2), 2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", outer)
-    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert 1 <= jobs_of(1) <= 2  # first epoch over a state: the one column check
+    assert 1 <= jobs_of(2) <= 2
     assert {r.k: r.v for r in spark.read.parquet(path).collect()} == {
         0: 0, 1: 11, **{i: 20 + i for i in range(2, 20)}
     }
+    files = glob.glob(f"{path}/*.parquet")
+    assert files
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for i in range(meta.num_row_groups):
+            for j in range(meta.num_columns):
+                encodings = meta.row_group(i).column(j).encodings
+                assert not any(e.endswith("_DICTIONARY") for e in encodings), (f, encodings)
 
     merged = _state_merger("k", ["v"])(batch(3), path)
     plan = merged._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning\(k#", plan)) == 1, plan
+    assert plan.count("Sort [") == 1, plan
     assert plan.count("Window [") == 1, plan
+    assert "WindowGroupLimit" not in plan, plan
 
 
 def test_rate_limit_bounds_micro_batches(spark, message_dir):

@@ -11,6 +11,9 @@ Usage:
     python tools/ab_interleaved.py --old /tmp/repo_r9 q1 q2 ...
     python tools/ab_interleaved.py --old /tmp/repo_r9 --samples 6 q1
 
+Results print as JSON lines and are written to ``--out``, by default
+``bench_ab/ab_<timestamp>.json`` in this repo.
+
 The OLD version is loaded from a git worktree checkout by temporarily
 swapping sys.modules/sys.path so both registries coexist in one process.
 The old worktree needs a spark-warehouse symlink if any query reads
@@ -69,7 +72,12 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--old", required=True, help="path to old-version worktree")
     ap.add_argument("--samples", type=int, default=5)
-    ap.add_argument("--out", default=None, help="write JSON results here too")
+    ap.add_argument(
+        "--out",
+        default=os.path.join(REPO, "bench_ab", f"ab_{time.strftime('%Y%m%d-%H%M%S')}.json"),
+        help="write JSON results here too (default: a timestamped file under "
+        "bench_ab/, so the evidence for a keep/revert can be committed)",
+    )
     args = ap.parse_args()
 
     old_q = _load_registry(args.old)
@@ -129,9 +137,10 @@ def main() -> int:
             ),
         }
         print(json.dumps({"query": name, **results[name]}))
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(results, fh, indent=1)
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    with open(args.out, "w") as fh:
+        json.dump(results, fh, indent=1)
+    print(f"results: {args.out}", file=sys.stderr)
     return 0
 
 
