@@ -25,7 +25,7 @@ from ..functions.exactagg import (
 )
 from ..functions.textfns import fingerprint, tokens
 from ..plans.registry import query
-from ..sources import load_table, spread
+from ..sources import load_table, spread, table_rowcount
 
 # Shared token regex for "BPE-ish" counting: letter runs, digit runs, or
 # single non-space symbols. ASCII-only so Java regex (Spark) and RE2
@@ -568,6 +568,9 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 HH_SUPPORT = 0.00005  # report trigrams with frequency > HH_SUPPORT of all
+# heavy_hitters fans `documents` out (spread) only from this many rows on;
+# below it one task per input partition is faster (see its docstring).
+HH_SPREAD_ROWS = 10_000
 
 
 @query(
@@ -602,11 +605,28 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The sketch is the MERGEABLE-SUMMARIES shape (Agarwal et al., TODS'13)
     next to HLL (`approx_distinct`) and GK (`approx_quantiles`) — here
-    used for candidate pruning so the final answer stays exact."""
+    used for candidate pruning so the final answer stays exact.
+
+    The candidate set is complete for ANY partitioning, so the query
+    reads `documents` as it lies, one task per input partition, and
+    `spread()`s it only from HH_SPREAD_ROWS rows (parquet footer count,
+    no Spark job) on. Below that the fan-out costs more than it saves:
+    each added Python task pays the fixed worker cost `spread()`
+    documents, and each consumer (sketch, `total`, pass 2) a round-robin
+    shuffle, while one core counts 5,000 documents in ~0.08 s. Measured
+    on single-row-group corpora (one input partition), 4 cores, 10+
+    interleaved pairs each: without the fan-out, 500 and 5,000
+    documents ran 18 % and 12 % faster at 44 % and 45 % less CPU;
+    10,000, 20,000 and 80,000 documents ran 8 %, 26 % and 77 % slower
+    at 42 %, 36 % and 17 % less CPU. An input that is already
+    default-parallelism wide (many files or row groups) is not fanned
+    out at any size."""
     import pandas as pd
 
     cap = int(1 / HH_SUPPORT)
-    d = spread(load_table(spark, "documents", sf_dir))
+    d = load_table(spark, "documents", sf_dir)
+    if table_rowcount("documents", sf_dir) >= HH_SPREAD_ROWS:
+        d = spread(d)
 
     def mg_partial(batches):
         # Batched Misra-Gries (optimization r10): exact-count each Arrow
@@ -614,8 +634,9 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and prune with the mergeable-summaries merge step (Agarwal et
         # al., TODS'13: subtract the (cap+1)-th largest count from all,
         # drop non-positive) instead of the per-gram decrement-all loop
-        # (~4M interpreted dict operations per partition at sf0.1 — the
-        # whole query's hot spot). The guarantee is unchanged: after any
+        # (~4M interpreted dict operations per partition at sf0.1 made
+        # that form the whole query's hot spot; this one counts sf0.1's
+        # 5,000 documents in ~0.08 s). The guarantee is unchanged: after any
         # sequence of merges+prunes every gram's counter undercounts by
         # at most N_partition/(cap+1), so any gram with partition
         # frequency > 1/cap survives — the same locally-heavy superset

@@ -28,6 +28,10 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     Schemas are declared in :mod:`..schemas`; for parquet we let the file
     metadata drive (parquet is self-describing and the driver generated it)
     but the registry is the contract tests assert against.
+
+    The file schema is resolved by Spark once per table file version and
+    memoized (:func:`_read_parquet`): a later read of the same files passes
+    it to ``spark.read.schema(...)`` and runs no footer-inference job.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
@@ -35,7 +39,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         # Runtime-settable; needed even when the caller (e.g. the driver
         # harness) built the session without our factory.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS); with
         # spark.sql.legacy.parquet.nanosAsLong it arrives as long nanos.
@@ -44,6 +48,65 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return _normalize_timestamps(df, TABLES[name])
+
+
+# Session confs that change how Spark maps a parquet footer to its types.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# (path, inference confs) -> (data-file signature, schema Spark inferred).
+# Process-wide on purpose: an entry is a function of its key and the files'
+# signature, so callers and sessions that share it get the schema a fresh
+# inference would give. One entry per path and conf tuple bounds its size.
+_SCHEMAS: dict[tuple, tuple] = {}
+
+
+def _data_files(path: str) -> tuple:
+    """``(file, mtime_ns, size)`` of every data file under ``path`` (a file
+    or a directory of part files), skipping the ``_``/``.`` names Spark
+    skips. Raises ``OSError`` when ``path`` is not a local path."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((path, st.st_mtime_ns, st.st_size),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in names:
+            if not n.startswith(("_", ".")):
+                f = os.path.join(root, n)
+                st = os.stat(f)
+                files.append((f, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the footer schema once per
+    file version.
+
+    Schema inference is a Spark job on every read (about 0.07 s warm on
+    a 4-core VM). The first read of a path infers as usual, so Spark's
+    type mapping (long nanos under ``nanosAsLong``, NTZ timestamps) is
+    exactly what a plain read gives; later reads pass that schema to
+    ``spark.read.schema``.
+    The memo is keyed by the path and the session confs that change
+    inference (``_INFERENCE_CONFS``), and holds the ``(mtime_ns, size)``
+    of each data file: a rewritten or added file resolves afresh. Paths
+    that are not local (no ``os.stat``) are read without the memo."""
+    try:
+        files = _data_files(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == files:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (files, df.schema)
+    return df
 
 
 def _normalize_timestamps(df: DataFrame, declared) -> DataFrame:
@@ -95,7 +158,15 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     small dimension) does all its per-row work on one core. No-op when
     the input is already at least default-parallelism wide, so at real
     scale (many files / row groups) it costs nothing; below that, one
-    tiny round-robin shuffle buys full fan-out."""
+    tiny round-robin shuffle buys full fan-out.
+
+    In front of a Python UDF (``mapInPandas``, pandas UDFs) each extra
+    task also pays a fixed Python-worker cost: the worker's
+    ``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
+    re-reads the archives and directories on the worker's path (measured
+    at 0.14-0.20 CPU s per task with the pyspark zip and the Spark jars
+    on it, 4-core VM). A fan-out there must save more work than that per
+    added task; heavy_hitters' 500-document Misra-Gries pass did not."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

@@ -2663,3 +2663,57 @@ def test_pairs_from_baskets_giant_basket_guard(spark):
     ).collect()[0]
     assert agg.n_pairs == 10000 * 9999 // 2
     assert agg.total == 10000 * 9999 // 2
+
+
+def test_load_table_resolves_schema_once_per_file_version(spark, sf_dir, tmp_path):
+    """load_table infers a table file's schema once: a second load runs
+    no Spark job, a rewritten file (new mtime and size) is resolved
+    afresh, and events.ts keeps its declared timestamp type, also when
+    the file stores nanoseconds (read as long under nanosAsLong)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from structured_streaming_cassandra_sink_spark.schemas import TABLES
+
+    sc = spark.sparkContext
+    for t in ("documents", "events"):
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    d = str(tmp_path)
+
+    def jobs_of(tag, name):
+        group, outer = f"t_schema_memo_{tag}", sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            df = load_table(spark, name, d)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, n_first = jobs_of("first", "documents")
+    again, n_again = jobs_of("again", "documents")
+    assert n_first >= 1  # the footer inference the memo saves
+    assert n_again == 0
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+    docs = pq.read_table(tmp_path / "documents.parquet")
+    docs = docs.append_column("extra", pa.array(range(docs.num_rows), pa.int64()))
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    grown = load_table(spark, "documents", d)
+    assert grown.columns[-1] == "extra"
+    assert grown.agg(F.sum("extra")).first()[0] == sum(range(docs.num_rows))
+
+    ts_type = {f.name: f.dataType for f in TABLES["events"].fields}["ts"]
+    want = sorted(r.ts for r in load_table(spark, "events", d).select("ts").collect())
+    ev = pq.read_table(tmp_path / "events.parquet")
+    i = ev.schema.get_field_index("ts")
+    ev = ev.set_column(i, "ts", ev.column(i).cast(pa.timestamp("ns")))
+    pq.write_table(ev, tmp_path / "events.parquet", version="2.6")
+    for tag, inferred in (("nanos_first", True), ("nanos_again", False)):
+        df, n = jobs_of(tag, "events")
+        assert (n >= 1) == inferred
+        assert df.schema["ts"].dataType == ts_type
+        assert sorted(r.ts for r in df.select("ts").collect()) == want

@@ -695,6 +695,62 @@ def test_simhash_single_shuffle_sketch(spark, sf_dir):
     assert "ArrowEvalPython" not in plan
 
 
+def test_heavy_hitters_python_pass_per_input_partition(spark, sf_dir):
+    """heavy_hitters equals its DuckDB oracle, and its Misra-Gries pass
+    reads the scan directly: no round-robin fan-out anywhere, and no
+    Exchange between the FileScan and MapInPandas, so the Python stage
+    runs one task per input partition (the candidate set is complete for
+    any partitioning)."""
+    import duckdb
+
+    df = registry.QUERIES["heavy_hitters"](spark, sf_dir)
+    got = sorted((r.gram, r.n) for r in df.collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    assert got == sorted(con.execute(registry.ORACLES["heavy_hitters"]).fetchall())
+    assert got
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "RoundRobinPartitioning" not in plan, plan
+    lines = plan.splitlines()
+    (top,) = [i for i, s in enumerate(lines) if "MapInPandas" in s]
+
+    def depth(s: str) -> int:
+        return len(s) - len(s.lstrip(" :+-"))
+
+    below = []
+    for s in lines[top + 1:]:
+        if depth(s) <= depth(lines[top]):
+            break
+        below.append(s.strip(" :+-"))
+    assert below[-1].startswith("FileScan parquet"), plan
+    assert not any("Exchange" in s or "QueryStage" in s for s in below), plan
+
+
+def test_heavy_hitters_spreads_large_single_partition_corpus(spark, sf_dir, tmp_path):
+    """From HH_SPREAD_ROWS documents on, a corpus that arrives as one
+    input partition (one file, one row group) is fanned out round-robin
+    before the Misra-Gries pass, and the rows still equal the oracle."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from structured_streaming_cassandra_sink_spark.operators.text import HH_SPREAD_ROWS
+
+    src = pq.read_table(f"{sf_dir}/documents.parquet")
+    docs = pa.concat_tables([src] * -(-HH_SPREAD_ROWS // src.num_rows))
+    pq.write_table(docs, tmp_path / "documents.parquet", row_group_size=docs.num_rows)
+
+    df = registry.QUERIES["heavy_hitters"](spark, str(tmp_path))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan, plan
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    want = sorted(con.execute(registry.ORACLES["heavy_hitters"]).fetchall())
+    assert sorted((r.gram, r.n) for r in df.collect()) == want
+
+
 def test_plan_guard_artifact_current_and_clean(spark, sf_dir):
     """PLAN_GUARD.json (tools/plan_guard.py sweep of EVERY registered
     query's physical plan) must cover the whole registry and record zero

@@ -6,6 +6,8 @@ IDENTICAL code drifted ±12% across one evening, so no two runs hours apart
 are comparable). Protocol: ONE Spark session, both implementations of each
 query run alternately (order flips per pass, bench.py-style), >=4 timed
 samples each after an untimed warm-up, same noop-sink timing as bench.py.
+Each sample records wall seconds and CPU seconds (user + system of this
+process, the JVM and the Python workers, as perfbench's ``cpu_s``).
 
 Usage:
     python tools/ab_interleaved.py --old /tmp/repo_r9 q1 q2 ...
@@ -35,6 +37,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import SF_DIR, bench_session  # noqa: E402
+
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+from tracing import cpu_seconds  # noqa: E402
 
 PKG = "structured_streaming_cassandra_sink_spark"
 
@@ -91,23 +96,25 @@ def main() -> int:
     spark = bench_session("ab-interleaved")
     spark.read.parquet(f"{SF_DIR}/nation.parquet").count()
 
-    def timed(fn) -> float:
-        t0 = time.perf_counter()
+    def timed(fn) -> tuple[float, float]:
+        c0, t0 = cpu_seconds(), time.perf_counter()
         df = fn(spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+        dt, cpu = time.perf_counter() - t0, cpu_seconds() - c0
         del df
         gc.collect()
         spark._jvm.System.gc()
         if dt > 2.0:
             time.sleep(min(2.0, dt / 2))
-        return dt
+        return dt, cpu
 
     results: dict[str, dict] = {}
     samples: dict[tuple[str, str], list[float]] = {}
+    cpus: dict[tuple[str, str], list[float]] = {}
     for name in args.names:
-        samples[(name, "old")] = []
-        samples[(name, "new")] = []
+        for variant in ("old", "new"):
+            samples[(name, variant)] = []
+            cpus[(name, variant)] = []
         # untimed warm-up of BOTH shapes (JIT/codegen/IO cache)
         spark.sparkContext.setJobDescription(f"warmup old {name}")
         timed(old_q[name])
@@ -120,10 +127,13 @@ def main() -> int:
             for variant in order:
                 fn = old_q[name] if variant == "old" else new_q[name]
                 spark.sparkContext.setJobDescription(f"{variant} {name} pass{p}")
-                samples[(name, variant)].append(timed(fn))
+                dt, cpu = timed(fn)
+                samples[(name, variant)].append(dt)
+                cpus[(name, variant)].append(cpu)
 
     for name in args.names:
         o, n = samples[(name, "old")], samples[(name, "new")]
+        oc, nc = cpus[(name, "old")], cpus[(name, "new")]
         results[name] = {
             "old": [round(x, 3) for x in o],
             "new": [round(x, 3) for x in n],
@@ -135,6 +145,10 @@ def main() -> int:
             "speedup_median": round(
                 statistics.median(o) / statistics.median(n), 3
             ),
+            "old_cpu": [round(x, 3) for x in oc],
+            "new_cpu": [round(x, 3) for x in nc],
+            "old_cpu_median": round(statistics.median(oc), 3),
+            "new_cpu_median": round(statistics.median(nc), 3),
         }
         print(json.dumps({"query": name, **results[name]}))
     os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
