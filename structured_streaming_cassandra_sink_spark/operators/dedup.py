@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.textfns import fingerprint, tokens
 from ..plans.registry import query
 from ..sources import load_table, spread
+from ..sources.artifacts import artifact_dir, current, publish
 
 NGRAM_N = 3
 JACCARD_THRESHOLD = 0.5
@@ -710,18 +711,6 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dupgraph_dir(sf_dir: str) -> str:
-    import os
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    return os.path.join(
-        repo_root, "spark-warehouse", "dupgraph",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
 def dupgraph_build(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> str:
     """Once-per-snapshot materialization of the near-dup pair graph —
     the build half of a build/probe split, same pattern as ivf_build /
@@ -734,28 +723,20 @@ def dupgraph_build(spark: SparkSession, sf_dir: str, out_dir: str | None = None)
     recomputes. dedup_ngram_jaccard itself still computes from scratch
     (it IS the generation operator); every consumer's ORACLE also still
     recomputes from raw text, so the driver compare proves build+probe
-    end-to-end."""
+    end-to-end. Published through `sources.artifacts.publish`, so readers
+    never see a half-built graph."""
     import os
 
-    from structured_streaming_cassandra_sink_spark.operators.similarity import _atomic_publish
-
-    out_dir = out_dir or _dupgraph_dir(sf_dir)
     docs = spread(load_table(spark, "documents", sf_dir))
-    tmp = f"{out_dir}.build-{os.getpid()}"
-    try:
+
+    def write(tmp: str) -> None:
         ngram_jaccard_pairs(docs).write.mode("overwrite").parquet(
             os.path.join(tmp, "pairs")
         )
-        from structured_streaming_cassandra_sink_spark.operators.similarity import write_source_marker
 
-        write_source_marker(tmp, sf_dir, ("documents",))
-    except BaseException:
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)  # no half-built leak
-        raise
-    _atomic_publish(tmp, out_dir)  # readers never see a half-built graph
-    return out_dir
+    return publish(
+        out_dir or artifact_dir("dupgraph", sf_dir), sf_dir, ("documents",), write
+    )
 
 
 def dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,11 +747,9 @@ def dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     every downstream graph probe)."""
     import os
 
-    from structured_streaming_cassandra_sink_spark.operators.similarity import index_current
-
-    gdir = _dupgraph_dir(sf_dir)
-    if not index_current(gdir, "pairs", sf_dir, ("documents",)):
-        dupgraph_build(spark, sf_dir)
+    gdir = artifact_dir("dupgraph", sf_dir)
+    if not current(gdir, sf_dir, ("documents",)):
+        dupgraph_build(spark, sf_dir, gdir)
     return spark.read.parquet(os.path.join(gdir, "pairs"))
 
 

@@ -23,6 +23,7 @@ from ..functions import ts_millis
 from ..functions.exactagg import avg_exact_sql, sum_exact_sql
 from ..plans.registry import query
 from ..sources import load_table, prefix_scan
+from ..sources.artifacts import artifact_dir, current, publish
 
 
 # ---------------------------------------------------------------------------
@@ -1136,44 +1137,20 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dpp_dir(sf_dir: str) -> str:
-    import os
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    return os.path.join(
-        repo_root, "spark-warehouse", "dpp_tables",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
 def dpp_build(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> str:
     """Once-per-snapshot layout job for `join_dpp_prune`: the lineitem
     fact re-written PARTITIONED BY ship month (the ingest-time layout a
     date-partitioned warehouse always has) plus the derived calendar
     dimension (month -> quarter). One file per partition (repartition
     before the partitioned write — same small-files rule as lsh_build).
-    Staged in a ``.build-*`` dir and published by gapless pointer swap
-    (`_atomic_publish`, ADVICE r4): a reader concurrent with a
-    staleness-triggered rebuild resolves either the old layout or the
-    new one, never a half-written lineitem_by_month."""
+    Published through `sources.artifacts.publish`: a reader concurrent
+    with a staleness-triggered rebuild resolves either the old layout or
+    the new one, never a half-written lineitem_by_month."""
     import os
-    import uuid
 
-    from structured_streaming_cassandra_sink_spark.operators.similarity import (
-        _atomic_publish,
-        write_source_marker,
-    )
-
-    out_dir = out_dir or _dpp_dir(sf_dir)
-    tmp_dir = f"{out_dir}.build-{uuid.uuid4().hex[:8]}"
     li = load_table(spark, "lineitem", sf_dir).withColumn(
         "ship_month", F.month("l_shipdate")
     )
-    li.repartition(12, "ship_month").write.mode("overwrite").partitionBy(
-        "ship_month"
-    ).parquet(os.path.join(tmp_dir, "lineitem_by_month"))
     cal = (
         li.select("ship_month")
         .distinct()
@@ -1184,10 +1161,16 @@ def dpp_build(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> s
             "quarter", (F.floor((F.col("ship_month") - 1) / 3) + 1).cast("int")
         )
     )
-    cal.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp_dir, "calendar"))
-    write_source_marker(tmp_dir, sf_dir, ("lineitem",))
-    _atomic_publish(tmp_dir, out_dir)
-    return out_dir
+
+    def write(tmp: str) -> None:
+        li.repartition(12, "ship_month").write.mode("overwrite").partitionBy(
+            "ship_month"
+        ).parquet(os.path.join(tmp, "lineitem_by_month"))
+        cal.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "calendar"))
+
+    return publish(
+        out_dir or artifact_dir("dpp_tables", sf_dir), sf_dir, ("lineitem",), write
+    )
 
 
 @query(
@@ -1215,10 +1198,8 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly against the unpartitioned table."""
     import os
 
-    from structured_streaming_cassandra_sink_spark.operators.similarity import index_current
-
-    out_dir = _dpp_dir(sf_dir)
-    if not index_current(out_dir, "calendar", sf_dir, ("lineitem",)):
+    out_dir = artifact_dir("dpp_tables", sf_dir)
+    if not current(out_dir, sf_dir, ("lineitem",)):
         dpp_build(spark, sf_dir, out_dir)
     fact = spark.read.parquet(os.path.join(out_dir, "lineitem_by_month"))
     dim = spark.read.parquet(os.path.join(out_dir, "calendar")).filter(

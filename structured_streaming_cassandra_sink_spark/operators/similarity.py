@@ -34,6 +34,7 @@ from ..functions.exactagg import (
 from ..functions.vectorfns import as_double, dot, norm
 from ..plans.registry import query
 from ..sources import load_table, spread, table_rowcount
+from ..sources.artifacts import artifact_dir, current, publish
 
 N_QUERIES = 5      # vec_id < 5 are the probe vectors
 TOP_K = 10
@@ -166,136 +167,6 @@ def with_hyperplane_sigs(df: DataFrame, vec_col: str, all_planes) -> DataFrame:
     return ex.select(*df.columns, "t", sig.alias("sig"))
 
 
-def _lsh_index_dir(sf_dir: str) -> str:
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(
-        os.path.join(repo_root, "spark-warehouse", "lsh_index"),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
-def _atomic_publish(tmp_dir: str, final_dir: str) -> None:
-    """Publish a freshly-built index directory by POINTER SWAP.
-
-    Spark's `mode("overwrite")` deletes the destination FIRST and then
-    writes — a concurrent probe that lists the dir in that window sees
-    an empty/partial index and dies with UNABLE_TO_INFER_SCHEMA. A
-    rename PAIR (final→trash, tmp→final) still has a gap where the path
-    does not exist. The gapless form is a publish-by-pointer: the
-    published path is a SYMLINK; each build lands in an immutable
-    ``.pub-*`` sibling and one `os.rename` of a pre-made symlink flips
-    the pointer — readers either resolve the old version or the new
-    one, never nothing. (On an object store this maps to the usual
-    publish-by-pointer manifest commit.)
-
-    Retention: the previous version's dir survives one more publish, so
-    a reader that resolved the pointer just before the swap can finish
-    its scan; older ``.pub-*`` dirs are GC'd. In-flight ``.build-*``
-    dirs are never touched."""
-    import os
-    import shutil
-    import uuid
-
-    parent = os.path.dirname(final_dir) or "."
-    base = os.path.basename(final_dir)
-    os.makedirs(parent, exist_ok=True)
-
-    # migrate a legacy real-directory layout (pre-pointer builds) into a
-    # version dir; the one-time gap only exists for layouts written by
-    # the old scheme
-    if os.path.isdir(final_dir) and not os.path.islink(final_dir):
-        os.rename(final_dir, f"{final_dir}.pub-legacy-{uuid.uuid4().hex[:8]}")
-
-    prev = os.path.realpath(final_dir) if os.path.islink(final_dir) else None
-
-    pub_dir = f"{final_dir}.pub-{uuid.uuid4().hex[:8]}"
-    os.rename(tmp_dir, pub_dir)
-    link_tmp = f"{final_dir}.lnk-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    os.symlink(os.path.abspath(pub_dir), link_tmp)
-    os.rename(link_tmp, final_dir)  # the atomic pointer swap
-
-    keep = {os.path.abspath(pub_dir)}
-    if prev is not None:
-        keep.add(os.path.abspath(prev))
-    for d in os.listdir(parent):
-        p = os.path.join(parent, d)
-        if d == base:
-            continue
-        if d.startswith(f"{base}.lnk-") and os.path.islink(p):
-            os.remove(p)  # stale pointer from a crashed publish
-        elif (
-            d.startswith(f"{base}.pub-")
-            and not os.path.islink(p)
-            and os.path.isdir(p)
-            and os.path.abspath(p) not in keep
-        ):
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def _source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> dict:
-    """Per-file (relpath, size, mtime_ns) fingerprint of the source
-    parquet(s) a warehouse artifact was built from. The driver
-    REGENERATES testdata between rounds; a persisted index that outlives
-    its corpus must rebuild, not silently serve vectors that no longer
-    exist in the source. Per-FILE entries, not dir aggregates (ADVICE
-    r4): an aggregate (total size, max mtime) false-matches data
-    restored with timestamp-preserving tooling (cp -p, rsync -a, tar,
-    object-store sync) whenever the totals collide — exactly the
-    stale-index failure the guard exists to prevent. A layout change
-    (different file set or per-file sizes) now always reads as changed
-    even when every mtime was preserved."""
-    import os
-
-    fp = {}
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        files = []
-        if os.path.isdir(p):
-            for root, _, names in os.walk(p):
-                for f in names:
-                    full = os.path.join(root, f)
-                    st = os.stat(full)
-                    files.append(
-                        [os.path.relpath(full, p), st.st_size, st.st_mtime_ns]
-                    )
-            files.sort()
-        elif os.path.exists(p):
-            st = os.stat(p)
-            files = [[os.path.basename(p), st.st_size, st.st_mtime_ns]]
-        fp[t] = files
-    return fp
-
-
-def write_source_marker(out_dir: str, sf_dir: str, tables: tuple[str, ...]) -> None:
-    """Record the source fingerprint inside a (pre-publish) index dir."""
-    import json
-    import os
-
-    with open(os.path.join(out_dir, "SOURCE.json"), "w") as fh:
-        json.dump(_source_fingerprint(sf_dir, tables), fh)
-
-
-def index_current(
-    index_dir: str, subdir: str, sf_dir: str, tables: tuple[str, ...]
-) -> bool:
-    """True iff the published artifact exists AND its recorded source
-    fingerprint matches the current data. A pre-marker index (or a
-    corrupt marker) reads as stale and rebuilds once."""
-    import json
-    import os
-
-    if not os.path.isdir(os.path.join(index_dir, subdir)):
-        return False
-    try:
-        with open(os.path.join(index_dir, "SOURCE.json")) as fh:
-            rec = json.load(fh)
-    except (OSError, ValueError):
-        return False
-    return rec == _source_fingerprint(sf_dir, tables)
-
-
 def signature_rows(batch: DataFrame) -> DataFrame:
     """(vec_id, v, t, sig, nv) signature rows for a vector batch — the
     SINGLE owner of the index row layout, shared by the snapshot build
@@ -321,27 +192,22 @@ def lsh_build(spark: SparkSession, sf_dir: str, index_dir: str | None = None) ->
     into a partition-pruned scan of ~L/2^bits of the data."""
     import os
 
-    index_dir = index_dir or _lsh_index_dir(sf_dir)
     corpus, _ = _corpus_and_queries(spark, sf_dir)
     csig = signature_rows(corpus)
-    # Cluster rows by bucket BEFORE the partitioned write: without it
-    # every input task writes a sliver into every (t, sig) dir it
-    # touches — tasks x buckets tiny files whose listing/open cost
-    # dominates the probe (measured 5000 files -> 2.8 s probe at sf0.1).
-    # After: one file per bucket. At 100 TB add maxRecordsPerFile.
-    tmp = f"{index_dir}.build-{os.getpid()}"
-    try:
+
+    def write(tmp: str) -> None:
+        # Cluster rows by bucket BEFORE the partitioned write: without it
+        # every input task writes a sliver into every (t, sig) dir it
+        # touches — tasks x buckets tiny files whose listing/open cost
+        # dominates the probe (measured 5000 files -> 2.8 s probe at sf0.1).
+        # After: one file per bucket. At 100 TB add maxRecordsPerFile.
         csig.repartition(LSH_TABLES * (1 << LSH_PLANES), "t", "sig").write.mode(
             "overwrite"
         ).partitionBy("t", "sig").parquet(os.path.join(tmp, "corpus"))
-        write_source_marker(tmp, sf_dir, ("embeddings",))
-    except BaseException:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)  # no half-built leak
-        raise
-    _atomic_publish(tmp, index_dir)
-    return index_dir
+    return publish(
+        index_dir or artifact_dir("lsh_index", sf_dir), sf_dir, ("embeddings",), write
+    )
 
 
 def lsh_probe(
@@ -354,7 +220,7 @@ def lsh_probe(
 
     import numpy as np
 
-    index_dir = index_dir or _lsh_index_dir(sf_dir)
+    index_dir = index_dir or artifact_dir("lsh_index", sf_dir)
     _, queries_df = _corpus_and_queries(spark, sf_dir)
     # Query signatures are computed DRIVER-side (numpy sign bits): the
     # probe batch is small and the giant literal signature expression is
@@ -444,10 +310,8 @@ def sim_search_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (t, sig) once per snapshot (lazy here), and the probe is a
     statically partition-pruned scan — the plan shows the (t, sig)
     PartitionFilters."""
-    import os
-
-    index_dir = _lsh_index_dir(sf_dir)
-    if not index_current(index_dir, "corpus", sf_dir, ("embeddings",)):
+    index_dir = artifact_dir("lsh_index", sf_dir)
+    if not current(index_dir, sf_dir, ("embeddings",)):
         lsh_build(spark, sf_dir, index_dir)
     return lsh_probe(spark, sf_dir, index_dir)
 
@@ -571,16 +435,6 @@ IVF_NPROBE = 4   # cells scanned per query
 _CENTROID_CACHE: dict[str, tuple] = {}
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    """Per-dataset index location under the repo's warehouse dir
-    (anchored at the package root so the driver's cwd doesn't matter)."""
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(repo_root, "spark-warehouse", "ivf_index", base)
-
-
 IVF_FIT_SAMPLE = 200_000  # vectors collected to fit centroids driver-side
 
 
@@ -631,7 +485,7 @@ def ivf_build(
     import numpy as np
     import pandas as pd
 
-    index_dir = index_dir or _ivf_index_dir(sf_dir)
+    index_dir = index_dir or artifact_dir("ivf_index", sf_dir)
     corpus, _ = _corpus_and_queries(spark, sf_dir)
     n = corpus.count()
     # deterministic hash sample of ~IVF_FIT_SAMPLE vectors (no RNG, no
@@ -667,10 +521,10 @@ def ivf_build(
     assigned = corpus.select("vec_id", "embedding").mapInPandas(
         assign, "vec_id long, v array<double>, cell int"
     ).withColumn("nv", norm(F.col("v")))
-    # One file per cell (see lsh_build: unclustered partitioned writes
-    # leave tasks x cells tiny files; at 100 TB add maxRecordsPerFile).
-    tmp = f"{index_dir}.build-{os.getpid()}"
-    try:
+
+    def write(tmp: str) -> None:
+        # One file per cell (see lsh_build: unclustered partitioned writes
+        # leave tasks x cells tiny files; at 100 TB add maxRecordsPerFile).
         assigned.repartition(nlist, "cell").write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(os.path.join(tmp, "corpus"))
@@ -678,13 +532,9 @@ def ivf_build(
         spark.createDataFrame(centroids, "cell int, centroid array<double>").coalesce(
             1
         ).write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        write_source_marker(tmp, sf_dir, ("embeddings",))
-    except BaseException:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)  # no half-built leak
-        raise
-    _atomic_publish(tmp, index_dir)  # corpus + centroids appear in ONE swap
+    # corpus + centroids appear in ONE swap
+    publish(index_dir, sf_dir, ("embeddings",), write)
     _CENTROID_CACHE.pop(index_dir, None)
     return index_dir
 
@@ -705,7 +555,7 @@ def ivf_probe(
 
     import numpy as np
 
-    index_dir = index_dir or _ivf_index_dir(sf_dir)
+    index_dir = index_dir or artifact_dir("ivf_index", sf_dir)
     _, queries_df = _corpus_and_queries(spark, sf_dir)
     # Cell ranking happens DRIVER-side, like a production IVF client: the
     # centroid table is <= nlist rows BY CONSTRUCTION (that is the IVF
@@ -767,10 +617,8 @@ def sim_search_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction of the corpus. The index is built lazily once per dataset
     (`ivf_build`) and reused — the amortization a production ANN service
     relies on; `bench.py` reports build and probe separately."""
-    import os
-
-    index_dir = _ivf_index_dir(sf_dir)
-    if not index_current(index_dir, "centroids", sf_dir, ("embeddings",)):
+    index_dir = artifact_dir("ivf_index", sf_dir)
+    if not current(index_dir, sf_dir, ("embeddings",)):
         ivf_build(spark, sf_dir, index_dir)
     return ivf_probe(spark, sf_dir, index_dir)
 
@@ -1765,17 +1613,6 @@ PQ_ADC_RERANK = 100      # exact-rerank pool floor per query
 PQ_ADC_RERANK_FRAC = 20  # ...or corpus/20, whichever is larger
 
 
-def _pq_index_dir(sf_dir: str) -> str:
-    """Per-dataset PQ index location (same scheme as _ivf_index_dir)."""
-    import os
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(repo_root, "spark-warehouse", "pq_index", base)
-
-
 def pq_build(
     spark: SparkSession, sf_dir: str, index_dir: str | None = None
 ) -> str:
@@ -1793,28 +1630,24 @@ def pq_build(
     Doubles round-trip parquet bit-exactly, so probe results are
     identical to the former inline form."""
     import os
-    import shutil
 
     from ..operators.clustering import _codebook, pq_code_rows
 
-    index_dir = index_dir or _pq_index_dir(sf_dir)
     corpus, _ = _corpus_and_queries(spark, sf_dir)
     cv = corpus.select("vec_id", as_double(F.col("embedding")).alias("v"))
     book = _codebook(cv, PQ_ADC_K, PQ_ADC_M).localCheckpoint(eager=False)
     codes = pq_code_rows(cv, book, PQ_ADC_M).select("vec_id", "m", "code")
     norms = cv.select("vec_id", norm(F.col("v")).alias("cn"))
-    tmp = f"{index_dir}.build-{os.getpid()}"
-    try:
+
+    def write(tmp: str) -> None:
         book.write.mode("overwrite").parquet(os.path.join(tmp, "codebook"))
         codes.join(norms, "vec_id").write.mode("overwrite").parquet(
             os.path.join(tmp, "codes")
         )
-        write_source_marker(tmp, sf_dir, ("embeddings",))
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)  # no half-built leak
-        raise
-    _atomic_publish(tmp, index_dir)
-    return index_dir
+
+    return publish(
+        index_dir or artifact_dir("pq_index", sf_dir), sf_dir, ("embeddings",), write
+    )
 
 
 def pq_adc_topk(
@@ -1840,8 +1673,8 @@ def pq_adc_topk(
 
     from ..operators.clustering import _subvectors
 
-    index_dir = index_dir or _pq_index_dir(sf_dir)
-    if not index_current(index_dir, "codes", sf_dir, ("embeddings",)):
+    index_dir = index_dir or artifact_dir("pq_index", sf_dir)
+    if not current(index_dir, sf_dir, ("embeddings",)):
         pq_build(spark, sf_dir, index_dir)
     corpus, queries_df = _corpus_and_queries(spark, sf_dir)
     # raw vectors are touched only by the rerank pool join below

@@ -18,7 +18,9 @@ Backends:
   rewrite of the table without parquet dictionaries. Replay safety comes
   from the merge being idempotent, not from a commit log: re-applying a
   committed epoch leaves the same end state.
-- ``parquet_append_sink`` — plain append (for append-semantics queries).
+- ``parquet_epoch_append_sink`` — the one append sink: each epoch
+  overwrites its own ``epoch=<id>`` partition, so a replayed epoch
+  cannot append its rows twice.
 - ``cassandra_upsert_sink`` — production path via the Spark Cassandra
   Connector (DataSourceV2); Cassandra writes are natively upserts, so the
   batch `.save()` IS the merge. Gated: the connector jar isn't in this
@@ -33,17 +35,6 @@ import shutil
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def parquet_append_sink(path: str):
-    """Plain append — NOT replay-safe: a re-delivered epoch appends its
-    rows twice. Use only behind an idempotent downstream (dedup) or use
-    :func:`parquet_epoch_append_sink`."""
-
-    def write(df: DataFrame, epoch_id: int) -> None:
-        df.write.mode("append").parquet(path)
-
-    return write
 
 
 def parquet_epoch_append_sink(path: str):

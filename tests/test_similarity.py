@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from structured_streaming_cassandra_sink_spark.plans import registry
 from structured_streaming_cassandra_sink_spark.operators.similarity import TOP_K, N_QUERIES
 
@@ -216,7 +218,7 @@ def test_atomic_publish_pointer_swap(tmp_path):
     stale tmp links cleaned."""
     import os
 
-    from structured_streaming_cassandra_sink_spark.operators.similarity import (
+    from structured_streaming_cassandra_sink_spark.sources.artifacts import (
         _atomic_publish,
     )
 
@@ -252,6 +254,56 @@ def test_atomic_publish_pointer_swap(tmp_path):
     _atomic_publish(build(4), legacy)
     assert os.path.islink(legacy)
     assert open(os.path.join(legacy, "corpus", "data.txt")).read() == "version 4"
+
+
+def test_publish_failed_build_leaves_no_staging(sf_dir, tmp_path):
+    """A build whose write raises leaves no ``.build-*`` sibling behind,
+    and the previously published version still resolves through the
+    pointer (with its marker, so it still reads as current)."""
+    import os
+
+    from structured_streaming_cassandra_sink_spark.sources.artifacts import (
+        current,
+        publish,
+    )
+
+    final = str(tmp_path / "art" / "sf0.001")
+
+    def good(tmp):
+        with open(os.path.join(tmp, "data.txt"), "w") as fh:
+            fh.write("version 1")
+
+    def bad(tmp):
+        with open(os.path.join(tmp, "data.txt"), "w") as fh:
+            fh.write("half")
+        raise RuntimeError("write failed")
+
+    publish(final, sf_dir, ("nation",), good)
+    with pytest.raises(RuntimeError, match="write failed"):
+        publish(final, sf_dir, ("nation",), bad)
+    assert not [d for d in os.listdir(tmp_path / "art") if ".build-" in d]
+    assert open(os.path.join(final, "data.txt")).read() == "version 1"
+    assert current(final, sf_dir, ("nation",))
+
+
+def test_warehouse_layout_lives_in_artifacts_module():
+    """Only sources/artifacts.py knows where warehouse artifacts live and
+    how a build is staged; every build site goes through it."""
+    import os
+
+    import structured_streaming_cassandra_sink_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    owner = os.path.join(root, "sources", "artifacts.py")
+    offenders = []
+    for d, _, names in os.walk(root):
+        for n in names:
+            f = os.path.join(d, n)
+            if n.endswith(".py") and f != owner:
+                text = open(f).read()
+                if "spark-warehouse" in text or ".build-" in text:
+                    offenders.append(os.path.relpath(f, root))
+    assert offenders == []
 
 
 def test_ndcg_bounds_and_topk_cap(spark, sf_dir):
@@ -342,38 +394,44 @@ def test_pq_index_roundtrip_bit_parity(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_index_source_fingerprint_staleness(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize(
+    "kind, table", [("pq_index", "embeddings"), ("dupgraph", "documents")]
+)
+def test_artifact_source_marker_staleness(spark, sf_dir, tmp_path, kind, table):
     """Persisted warehouse artifacts carry a SOURCE.json fingerprint of
     the parquet they were built from, and every lazy-build site gates on
-    index_current(): a marker that mismatches the live data (or a
-    pre-marker index) reads as stale and rebuilds instead of silently
-    serving a corpus that no longer exists (the driver regenerates
-    testdata between rounds)."""
+    artifacts.current(): a marker that mismatches the live data (or a
+    pre-marker artifact) reads as stale and rebuilds instead of silently
+    serving rows that no longer exist (the driver regenerates testdata
+    between rounds)."""
     import json
     import os
 
-    from structured_streaming_cassandra_sink_spark.operators.similarity import (
-        index_current,
-        pq_build,
-    )
+    from structured_streaming_cassandra_sink_spark.operators.dedup import dupgraph_build
+    from structured_streaming_cassandra_sink_spark.operators.similarity import pq_build
+    from structured_streaming_cassandra_sink_spark.sources.artifacts import current
 
-    idx = str(tmp_path / "pq_index")
-    pq_build(spark, sf_dir, index_dir=idx)
-    assert index_current(idx, "codes", sf_dir, ("embeddings",))
+    build = {"pq_index": pq_build, "dupgraph": dupgraph_build}[kind]
+    idx = str(tmp_path / kind)
+    build(spark, sf_dir, idx)
+    assert current(idx, sf_dir, (table,))
 
     # a fingerprint from different data -> stale
     marker = os.path.join(idx, "SOURCE.json")
     real = os.path.realpath(idx)  # write through the published symlink
     with open(os.path.join(real, "SOURCE.json"), "w") as fh:
-        json.dump({"embeddings": [1, 1]}, fh)
-    assert not index_current(idx, "codes", sf_dir, ("embeddings",))
+        json.dump({table: [1, 1]}, fh)
+    assert not current(idx, sf_dir, (table,))
 
-    # a pre-marker index (no SOURCE.json) -> stale, rebuilds once
+    # a pre-marker artifact (no SOURCE.json) -> stale, rebuilds once
     os.remove(os.path.join(real, "SOURCE.json"))
-    assert not index_current(idx, "codes", sf_dir, ("embeddings",))
+    assert not current(idx, sf_dir, (table,))
     assert os.path.exists(marker) is False
-    pq_build(spark, sf_dir, index_dir=idx)
-    assert index_current(idx, "codes", sf_dir, ("embeddings",))
+    build(spark, sf_dir, idx)
+    assert current(idx, sf_dir, (table,))
+
+    # a missing source table reads as stale, not as an error
+    assert not current(idx, str(tmp_path / "no-such-sf"), (table,))
 
 
 def test_embedding_lsh_production_regime_recall(spark, tmp_path):
