@@ -36,6 +36,14 @@ def _sf_from_dir(d: str) -> float:
     return float(m.group(1).rstrip(".")) if m else -1.0
 
 
+def replaces_full_record(names, registered, sf: float, committed: dict | None) -> bool:
+    """Whether a run may overwrite BENCH_FULL.json, the committed
+    full-bench baseline: only when it timed every registered query at
+    the committed record's scale, or no record exists yet. A subset or
+    other-scale smoke run would otherwise destroy the baseline."""
+    return set(registered) <= set(names) and (committed is None or committed.get("sf") == sf)
+
+
 def _loadavg() -> list[float] | None:
     try:
         with open("/proc/loadavg") as fh:
@@ -227,11 +235,24 @@ def main() -> int:
         "ambient": ambient,
         **extras,
     }
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"), "w") as fh:
-            json.dump(full, fh, indent=1)
-    except OSError:
-        pass  # read-only checkout: the printed line still has the headline
+        with open(full_path) as fh:
+            committed = json.load(fh)
+    except (OSError, ValueError):
+        committed = None
+    wrote_full = replaces_full_record(names, queries, full["sf"], committed)
+    if wrote_full:
+        try:
+            with open(full_path, "w") as fh:
+                json.dump(full, fh, indent=1)
+        except OSError:
+            pass  # read-only checkout: the printed line still has the headline
+    else:
+        print(
+            "bench: subset or other-scale run, BENCH_FULL.json left alone",
+            file=sys.stderr,
+        )
 
     line = dict(full)
     # Printed line gets a compact ambient summary (full per-pass records
@@ -247,7 +268,7 @@ def main() -> int:
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])
     line["queries"] = {}
     line["queries_n_total"] = len(timings)
-    line["full_results"] = "BENCH_FULL.json"
+    line["full_results"] = "BENCH_FULL.json" if wrote_full else None
     # placeholder at MAX width BEFORE the trim loop, so the final value
     # (always <= len(timings), so never wider) cannot push the line back
     # over the budget the loop just enforced

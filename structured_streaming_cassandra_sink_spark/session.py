@@ -21,6 +21,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -82,3 +83,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_pinned(spark: SparkSession, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the block, then put
+    it back: restore the previous value, or unset the key if it was not
+    set, also when the block raises. A streaming query captures the
+    session conf when it starts, so pinning across ``.start()`` fixes
+    the conf for that query's whole life while other queries in the
+    shared session keep their own."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from ..functions.textfns import fingerprint
 from ..operators.curation import MIN_QUALITY, quality_expr
 from .sinks import parquet_upsert_sink, start_to_sink
+from .sources import events_to_messages, file_message_stream, parse_message_stream
 
 DOC_WIRE = T.StructType(
     [
@@ -35,14 +36,10 @@ DOC_WIRE = T.StructType(
 
 
 def docs_to_messages(docs: DataFrame, records_per_message: int = 3) -> DataFrame:
-    """Pack documents into Kafka-shaped multi-record messages."""
-    return (
-        docs.select("doc_id", "text", "lang", "source")
-        .withColumn("json", F.to_json(F.struct("doc_id", "text", "lang", "source")))
-        .withColumn("msg_id", F.floor(F.col("doc_id") / records_per_message))
-        .groupBy("msg_id")
-        .agg(F.concat_ws("\n", F.collect_list("json")).alias("value"))
-        .select("value")
+    """Pack documents into Kafka-shaped multi-record messages, keyed by
+    doc_id, through the one message encoder."""
+    return events_to_messages(
+        docs.select("doc_id", "text", "lang", "source"), records_per_message
     )
 
 
@@ -70,10 +67,7 @@ def streaming_curation(
 ):
     """End-to-end streaming curation into a parquet corpus keyed by
     content fingerprint."""
-    from .sources import file_message_stream, parse_message_stream
-
-    messages = file_message_stream(spark, source_dir)
-    parsed = parse_message_stream(messages, schema=DOC_WIRE)
+    parsed = parse_message_stream(file_message_stream(spark, source_dir), schema=DOC_WIRE)
     curated = curate(parsed)
     sink = parquet_upsert_sink(sink_dir, key="fp", order=["keep_priority"])
     return start_to_sink(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.similarity import signature_rows
 # signature_rows re-exported: the incremental refresh and the snapshot
 # build share the ONE index-row definition in operators/similarity.py.
+from .sinks import start_to_sink
 
 
 def lsh_refresh_batch(batch: DataFrame, epoch_id: int, index_dir: str) -> None:
@@ -70,13 +71,10 @@ def streaming_lsh_refresh(
         .option("maxFilesPerTrigger", 1)
         .parquet(vectors_dir)
     )
-    return (
-        vecs.writeStream.queryName(query_name)
-        .outputMode("append")
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(index_dir, "_checkpoint"),
-        )
-        .foreachBatch(lambda b, eid: lsh_refresh_batch(b, eid, index_dir))
-        .start()
+    return start_to_sink(
+        vecs,
+        lambda b, eid: lsh_refresh_batch(b, eid, index_dir),
+        checkpoint_dir or os.path.join(index_dir, "_checkpoint"),
+        query_name=query_name,
+        output_mode="append",
     )

@@ -14,8 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.flagship import transform_events
-from .batch_equiv import session_agg, tumbling_agg
-from .sinks import parquet_upsert_sink, start_to_sink
+from .batch_equiv import session_agg, sliding_agg, tumbling_agg, tumbling_distinct_agg
+from .sinks import parquet_upsert_sink, start_to_memory, start_to_sink
 from .sources import file_message_stream, parse_message_stream
 
 WATERMARK = "10 minutes"
@@ -48,15 +48,9 @@ def streaming_tumbling(spark: SparkSession, source_dir: str, query_name: str = "
     (complete mode: finite test data can't advance the watermark past the
     last windows; complete emits them all — equivalence with the batch
     tumbling_agg is exact)."""
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages).withWatermark("ts", WATERMARK)
-    agg = tumbling_agg(events)
-    return (
-        agg.writeStream.queryName(query_name)
-        .outputMode("complete")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    agg = tumbling_agg(events.withWatermark("ts", WATERMARK))
+    return start_to_memory(agg, query_name, "complete")
 
 
 def streaming_tumbling_update_upsert(
@@ -82,9 +76,8 @@ def streaming_tumbling_update_upsert(
     for the same reason as streaming_funnel: equality tests must set it
     wider than the data span because the file mirror replays out of
     event-time order."""
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages).withWatermark("ts", watermark)
-    agg = tumbling_agg(events).withColumn(
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    agg = tumbling_agg(events.withWatermark("ts", watermark)).withColumn(
         "wkey",
         F.concat_ws("|", F.col("window_start").cast("string"), F.col("event_type")),
     )
@@ -98,17 +91,9 @@ def streaming_sliding(spark: SparkSession, source_dir: str, query_name: str = "S
     """1-hour windows sliding every 30 min (each event in exactly 2
     windows via Spark's Expand) — complete mode, same rationale as
     streaming_tumbling."""
-    from .batch_equiv import sliding_agg
-
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages).withWatermark("ts", WATERMARK)
-    agg = sliding_agg(events)
-    return (
-        agg.writeStream.queryName(query_name)
-        .outputMode("complete")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    agg = sliding_agg(events.withWatermark("ts", WATERMARK))
+    return start_to_memory(agg, query_name, "complete")
 
 
 def streaming_session(
@@ -124,40 +109,26 @@ def streaming_session(
     its own tail otherwise), and set ``watermark`` wider than the data's
     time span because the file mirror doesn't replay in event-time order
     (see streaming_funnel)."""
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages).withWatermark("ts", watermark)
-    agg = session_agg(events)
-    return (
-        agg.writeStream.queryName(query_name)
-        .outputMode("append")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    agg = session_agg(events.withWatermark("ts", watermark))
+    return start_to_memory(agg, query_name, "append")
 
 
-def streaming_funnel(
-    spark: SparkSession,
-    source_dir: str,
-    query_name: str = "Funnel",
-    watermark: str = WATERMARK,
-):
-    """Stream-stream interval join: clicks within 10 min after a view by
-    the same user (the batch twin is the oracle-checked
-    `join_interval_funnel` query). Both sides carry watermarks and the
-    join condition time-bounds the match window, so each side's state
-    store holds only watermark + 10 minutes of rows — the condition that
-    makes an unbounded stream-stream join finite.
-
-    ``watermark`` is a parameter because the equality TEST must set it
-    wider than the dataset's time span: the file mirror source does not
-    replay in event-time order, and any batch arriving behind the
-    advanced watermark would be (correctly!) evicted — that's late-data
-    semantics, not a bug, but it makes stream==batch comparison
-    nondeterministic under arbitrary file ordering."""
+def funnel_join(events: DataFrame, watermark: str, how: str = "inner") -> DataFrame:
+    """The one funnel stream-stream join: the parsed event stream split
+    into a views side and a clicks side (a streaming self-join), each
+    carrying its own ``watermark``, joined on the equi key (user_id)
+    plus the bounded time condition click in (view_ts, view_ts +
+    FUNNEL_WINDOW_MIN min]. Both sides carry watermarks and the
+    condition time-bounds the match window, so each side's state store
+    holds only watermark + FUNNEL_WINDOW_MIN of rows — the condition
+    that makes an unbounded stream-stream join finite. ``how`` is
+    ``"inner"`` or ``"leftOuter"``. The payload is exact-integer: dm_us
+    = click micros - view micros (int64), for readers that divide it
+    back to minutes."""
+    from ..functions import ts_micros
     from ..operators.timeseries import FUNNEL_WINDOW_MIN
 
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages)
     v = (
         events.filter(F.col("event_type") == "view")
         .select(
@@ -174,7 +145,7 @@ def streaming_funnel(
         )
         .withWatermark("click_ts", watermark)
     )
-    joined = v.join(
+    return v.join(
         c,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("click_ts") > F.col("view_ts"))
@@ -182,13 +153,34 @@ def streaming_funnel(
             F.col("click_ts")
             <= F.col("view_ts") + F.expr(f"INTERVAL {FUNNEL_WINDOW_MIN} MINUTES")
         ),
-    ).select("user_id", "view_id", "click_id")
-    return (
-        joined.writeStream.queryName(query_name)
-        .outputMode("append")
-        .format("memory")
-        .start()
+        how,
+    ).select(
+        "user_id",
+        "view_id",
+        "click_id",
+        (ts_micros("click_ts") - ts_micros("view_ts")).alias("dm_us"),
     )
+
+
+def streaming_funnel(
+    spark: SparkSession,
+    source_dir: str,
+    query_name: str = "Funnel",
+    watermark: str = WATERMARK,
+):
+    """Stream-stream interval join (:func:`funnel_join`): clicks within
+    10 min after a view by the same user (the batch twin is the
+    oracle-checked `join_interval_funnel` query), to an in-memory sink.
+
+    ``watermark`` is a parameter because the equality TEST must set it
+    wider than the dataset's time span: the file mirror source does not
+    replay in event-time order, and any batch arriving behind the
+    advanced watermark would be (correctly!) evicted — that's late-data
+    semantics, not a bug, but it makes stream==batch comparison
+    nondeterministic under arbitrary file ordering."""
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    joined = funnel_join(events, watermark).select("user_id", "view_id", "click_id")
+    return start_to_memory(joined, query_name, "append")
 
 
 def streaming_dedup_events(spark: SparkSession, source_dir: str, query_name: str = "DedupEvents"):
@@ -197,15 +189,9 @@ def streaming_dedup_events(spark: SparkSession, source_dir: str, query_name: str
     within the watermark horizon are suppressed, state older than the
     horizon is evicted (the unbounded-state fix the naive dropDuplicates
     would have)."""
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages).withWatermark("ts", WATERMARK)
-    deduped = events.dropDuplicatesWithinWatermark(["event_id"])
-    return (
-        deduped.writeStream.queryName(query_name)
-        .outputMode("append")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    deduped = events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(["event_id"])
+    return start_to_memory(deduped, query_name, "append")
 
 
 def streaming_tumbling_distinct(
@@ -217,14 +203,6 @@ def streaming_tumbling_distinct(
     distinct would hold every user id per open window); complete mode
     over the file-mirror, converges to within HLL rsd of the batch
     exact count (pinned in tests)."""
-    from .batch_equiv import tumbling_distinct_agg
-
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages).withWatermark("ts", WATERMARK)
-    return (
-        tumbling_distinct_agg(events, exact=False)
-        .writeStream.queryName(query_name)
-        .outputMode("complete")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    agg = tumbling_distinct_agg(events.withWatermark("ts", WATERMARK), exact=False)
+    return start_to_memory(agg, query_name, "complete")

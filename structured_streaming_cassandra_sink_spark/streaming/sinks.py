@@ -25,6 +25,12 @@ Backends:
   Connector (DataSourceV2); Cassandra writes are natively upserts, so the
   batch `.save()` IS the merge. Gated: the connector jar isn't in this
   environment.
+
+Starters — the only ``writeStream`` calls in the package:
+- ``start_to_sink`` — checkpointed ``foreachBatch`` into one of the
+  backends above, continuous or ``Trigger.AvailableNow``;
+- ``start_to_memory`` — the in-memory table sink the demo pipelines
+  use, queryable as ``SELECT * FROM <query_name>``.
 """
 
 from __future__ import annotations
@@ -228,3 +234,10 @@ def start_to_sink(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def start_to_memory(df: DataFrame, query_name: str, output_mode: str):
+    """Start ``df`` into Spark's in-memory table sink, registered under
+    ``query_name`` — the same queryName/outputMode/start lifecycle as
+    :func:`start_to_sink`, for streams read back with SQL."""
+    return df.writeStream.queryName(query_name).outputMode(output_mode).format("memory").start()

@@ -72,9 +72,13 @@ def file_message_stream(
 
 
 def events_to_messages(events: DataFrame, records_per_message: int = 3) -> DataFrame:
-    """Batch helper: pack events into Kafka-shaped messages — JSON-encode
-    each row, then '\\n'-join groups of `records_per_message` (mirrors the
-    reference's multi-record payloads, cassandra_sink.scala:92-97)."""
+    """The one message encoder: pack rows into Kafka-shaped messages —
+    JSON-encode each row, then '\\n'-join the rows whose id (the FIRST
+    column: ``event_id`` for events, ``doc_id`` for documents) floors to
+    the same multiple of ``records_per_message`` (mirrors the
+    reference's multi-record payloads, cassandra_sink.scala:92-97).
+    TIMESTAMP_NTZ columns go on the wire as tz-aware TIMESTAMP (see
+    EVENT_WIRE), written in the wire's microsecond formats."""
     cols = [
         F.col(c).cast("timestamp").alias(c)
         if isinstance(events.schema[c].dataType, T.TimestampNTZType)
@@ -86,7 +90,7 @@ def events_to_messages(events: DataFrame, records_per_message: int = 3) -> DataF
             "json",
             F.to_json(F.struct(*cols), _JSON_OPTS),
         )
-        .withColumn("msg_id", F.floor(F.col("event_id") / records_per_message))
+        .withColumn("msg_id", F.floor(F.col(events.columns[0]) / records_per_message))
         .groupBy("msg_id")
         .agg(F.concat_ws("\n", F.collect_list("json")).alias("value"))
         .select("value")

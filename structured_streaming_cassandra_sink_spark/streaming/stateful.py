@@ -26,6 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import conf_pinned
+from .sinks import start_to_memory
+from .sources import file_message_stream, parse_message_stream
+
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double, last_ts timestamp"
 STATE_SCHEMA = "n bigint, s double, last_us bigint"
 
@@ -86,17 +90,8 @@ def running_totals(events: DataFrame) -> DataFrame:
 def streaming_running_totals(spark, source_dir: str, query_name: str = "RunningTotals"):
     """File-mirror-source wiring; memory sink in update mode so the latest
     row per user is the converged accumulator."""
-    from .sources import file_message_stream, parse_message_stream
-
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages)
-    totals = running_totals(events)
-    return (
-        totals.writeStream.queryName(query_name)
-        .outputMode("update")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    return start_to_memory(running_totals(events), query_name, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -165,17 +160,8 @@ def streaming_sessionize(spark, source_dir: str, query_name: str = "Sessionize")
     """File-mirror wiring: one file per micro-batch (time-sliced by the
     caller), append-mode memory sink — every event appears exactly once
     with its assigned session id."""
-    from .sources import file_message_stream, parse_message_stream
-
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages)
-    return (
-        sessionize_events(events)
-        .writeStream.queryName(query_name)
-        .outputMode("append")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    return start_to_memory(sessionize_events(events), query_name, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -384,17 +370,8 @@ def heavy_hitters_stream(events: DataFrame) -> DataFrame:
 
 
 def streaming_heavy_hitters(spark, source_dir: str, query_name: str = "HeavyHitters"):
-    from .sources import file_message_stream, parse_message_stream
-
-    messages = file_message_stream(spark, source_dir)
-    events = parse_message_stream(messages)
-    return (
-        heavy_hitters_stream(events)
-        .writeStream.queryName(query_name)
-        .outputMode("update")
-        .format("memory")
-        .start()
-    )
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    return start_to_memory(heavy_hitters_stream(events), query_name, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -412,6 +389,8 @@ def streaming_heavy_hitters(spark, source_dir: str, query_name: str = "HeavyHitt
 # ---------------------------------------------------------------------------
 
 TWS_TOPK = 3
+STATE_STORE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 TWS_OUTPUT = "user_id bigint, value double, event_id bigint, rnk int"
 _TWS_AVAILABLE = True
 try:
@@ -484,32 +463,12 @@ def topk_events_stream(events: DataFrame) -> DataFrame:
 def streaming_topk_events(spark, source_dir: str, query_name: str = "TopKEvents"):
     """transformWithState requires the RocksDB state store (the HDFS
     provider lacks the multi-column-family layout its typed states map
-    onto) — set BEFORE start; the conf is captured per query."""
-    from .sources import file_message_stream, parse_message_stream
-
-    KEY = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(KEY, None)
-    spark.conf.set(
-        KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        messages = file_message_stream(spark, source_dir)
-        events = parse_message_stream(messages)
-        return (
-            topk_events_stream(events)
-            .writeStream.queryName(query_name)
-            .outputMode("update")
-            .format("memory")
-            .start()
-        )
-    finally:
-        # the started query captured its conf at analysis; restore so
-        # OTHER queries in the shared session keep the default provider
-        if prev is None:
-            spark.conf.unset(KEY)
-        else:
-            spark.conf.set(KEY, prev)
+    onto). The provider is pinned across ``.start()``: the started query
+    keeps it, and OTHER queries in the shared session keep the default
+    provider."""
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    with conf_pinned(spark, STATE_STORE_PROVIDER, ROCKSDB_PROVIDER):
+        return start_to_memory(topk_events_stream(events), query_name, "update")
 
 
 # -- ValueState form: the running-totals accumulator on the new API ---------
@@ -576,26 +535,7 @@ def streaming_running_totals_tws(
     spark, source_dir: str, query_name: str = "RunningTotalsTWS"
 ):
     """File-mirror wiring for the ValueState accumulator (RocksDB
-    provider flip handled the same way as streaming_topk_events)."""
-    from .sources import file_message_stream, parse_message_stream
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        totals = running_totals_tws(
-            parse_message_stream(file_message_stream(spark, source_dir))
-        )
-        return (
-            totals.writeStream.queryName(query_name)
-            .outputMode("update")
-            .format("memory")
-            .start()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    provider pinned the same way as streaming_topk_events)."""
+    events = parse_message_stream(file_message_stream(spark, source_dir))
+    with conf_pinned(spark, STATE_STORE_PROVIDER, ROCKSDB_PROVIDER):
+        return start_to_memory(running_totals_tws(events), query_name, "update")

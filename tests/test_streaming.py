@@ -491,14 +491,13 @@ def test_rocksdb_state_store_backend(spark, message_dir):
     """The production state backend (RocksDB provider, bundled with
     Spark) runs the watermarked tumbling aggregation and matches the
     batch twin — state semantics are provider-independent."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    from structured_streaming_cassandra_sink_spark.session import conf_pinned
+    from structured_streaming_cassandra_sink_spark.streaming.stateful import (
+        ROCKSDB_PROVIDER,
+        STATE_STORE_PROVIDER,
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+
+    with conf_pinned(spark, STATE_STORE_PROVIDER, ROCKSDB_PROVIDER):
         q = streaming_tumbling(spark, message_dir, query_name="t_rocksdb")
         try:
             q.processAllAvailable()
@@ -508,11 +507,6 @@ def test_rocksdb_state_store_backend(spark, message_dir):
             }
         finally:
             q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     want = {
         (r.window_start, r.window_end, r.event_type): (r.n, r.sum_value)
         for r in tumbling_agg(_batch_parsed(spark, message_dir)).collect()
@@ -1908,26 +1902,30 @@ def test_funnel_join_state_evicted(spark, sf_dir, tmp_path):
     import json
     import os
 
+    from structured_streaming_cassandra_sink_spark.session import conf_pinned
     from structured_streaming_cassandra_sink_spark.sources import load_table
+    from structured_streaming_cassandra_sink_spark.streaming.pipeline import funnel_join
     from structured_streaming_cassandra_sink_spark.streaming.sinks import (
         parquet_epoch_append_sink,
         start_to_sink,
     )
+    from structured_streaming_cassandra_sink_spark.streaming.sources import (
+        file_message_stream,
+    )
     from structured_streaming_cassandra_sink_spark.streaming.stream_rows import (
         FUNNEL_JOIN_WM,
-        _funnel_joined_stream,
         _write_ordered_chunks,
     )
 
     events = load_table(spark, "events", sf_dir)
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with conf_pinned(spark, "spark.sql.session.timeZone", "UTC"):
         msg = str(tmp_path / "messages")
         sink = str(tmp_path / "table")
         ck = str(tmp_path / "ck")
         _write_ordered_chunks(events, msg)
-        j = _funnel_joined_stream(spark, msg, FUNNEL_JOIN_WM, "inner")
+        j = funnel_join(
+            parse_message_stream(file_message_stream(spark, msg)), FUNNEL_JOIN_WM, "inner"
+        )
         q = start_to_sink(
             j,
             parquet_epoch_append_sink(sink),
@@ -1940,8 +1938,6 @@ def test_funnel_join_state_evicted(spark, sf_dir, tmp_path):
         # PySpark 4 returns StreamingQueryProgress objects; .json is the
         # stable serialized form
         progresses = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
 
     # (a) converged sink == batch interval join over the same events
     got = {
@@ -1989,12 +1985,16 @@ def test_left_join_expiry_boundary_is_strict(spark, tmp_path):
     microseconds; this test makes the boundary an engine contract, so a
     future second-granular generator cannot silently flip one row
     between engines."""
+    from structured_streaming_cassandra_sink_spark.session import conf_pinned
+    from structured_streaming_cassandra_sink_spark.streaming.pipeline import funnel_join
     from structured_streaming_cassandra_sink_spark.streaming.sinks import (
         parquet_epoch_append_sink,
         start_to_sink,
     )
+    from structured_streaming_cassandra_sink_spark.streaming.sources import (
+        file_message_stream,
+    )
     from structured_streaming_cassandra_sink_spark.streaming.stream_rows import (
-        _funnel_joined_stream,
         _write_ordered_chunks,
     )
 
@@ -2007,9 +2007,7 @@ def test_left_join_expiry_boundary_is_strict(spark, tmp_path):
         (3, "2024-01-01 10:10:00", 3, "view", 1.0, None),
         (4, "2024-01-01 10:10:00", 4, "click", 1.0, None),
     ]
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with conf_pinned(spark, "spark.sql.session.timeZone", "UTC"):
         ev = spark.createDataFrame(
             rows,
             "event_id long, ts string, user_id long, event_type string,"
@@ -2019,7 +2017,9 @@ def test_left_join_expiry_boundary_is_strict(spark, tmp_path):
         sink = str(tmp_path / "table")
         ck = str(tmp_path / "ck")
         _write_ordered_chunks(ev, msg)
-        j = _funnel_joined_stream(spark, msg, "0 seconds", "leftOuter")
+        j = funnel_join(
+            parse_message_stream(file_message_stream(spark, msg)), "0 seconds", "leftOuter"
+        )
         q = start_to_sink(
             j,
             parquet_epoch_append_sink(sink),
@@ -2029,8 +2029,6 @@ def test_left_join_expiry_boundary_is_strict(spark, tmp_path):
             available_now=True,
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
     emitted = {
         r.view_id for r in spark.read.parquet(sink).collect()
     }
@@ -2178,3 +2176,50 @@ def test_tws_running_totals_processor_contract_protobuf_free():
         float(o2["sum_value"][0]),
         o2["last_ts"][0],
     ) == (3, 8.0, pd.Timestamp("2024-01-01 12:30:00.999999"))
+
+
+def test_conf_pinned_restores_set_and_unsets_unset(spark):
+    """The one conf pin puts the session back as it found it: a key that
+    was set gets its value back, a key that was unset is unset again,
+    and both hold when the body raises."""
+    from structured_streaming_cassandra_sink_spark.session import conf_pinned
+
+    set_key, unset_key = "spark.sql.session.timeZone", "spark.graft.test.pinned"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+
+    with conf_pinned(spark, set_key, "America/New_York"):
+        assert spark.conf.get(set_key) == "America/New_York"
+    assert spark.conf.get(set_key) == before
+
+    with conf_pinned(spark, unset_key, "on"):
+        assert spark.conf.get(unset_key) == "on"
+    assert spark.conf.get(unset_key, None) is None
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with conf_pinned(spark, set_key, "America/New_York"), conf_pinned(
+            spark, unset_key, "on"
+        ):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+
+def test_stream_harness_has_one_starter_one_pin_one_encoder():
+    """Every stream in streaming/ is started by sinks.py, pins confs only
+    through session.conf_pinned, and is packed by the one encoder
+    (sources.events_to_messages)."""
+    import structured_streaming_cassandra_sink_spark.streaming as streaming
+
+    root = os.path.dirname(streaming.__file__)
+    found: dict[str, set[str]] = {}
+    for n in sorted(os.listdir(root)):
+        if n.endswith(".py"):
+            text = open(os.path.join(root, n)).read()
+            for token in ("writeStream", "conf.set(", "conf.unset(", "to_json("):
+                if token in text:
+                    found.setdefault(token, set()).add(n)
+    assert found.get("writeStream") == {"sinks.py"}
+    assert "conf.set(" not in found and "conf.unset(" not in found
+    assert found.get("to_json(") == {"sources.py"}
+    assert open(os.path.join(root, "sources.py")).read().count("to_json(") == 1
