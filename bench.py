@@ -12,23 +12,31 @@ Prints ONE JSON line:
 
 Execution is forced with the `noop` DataSourceV2 sink (computes every
 column, writes nothing, no driver collect) so the measured time is the
-distributed plan, not result serialization.
+distributed plan, not result serialization. The session is
+``session.get_spark``'s, the one tests, tools/check.py and perfbench run.
+
+``timed_step`` and ``settle`` are the one measuring step of every timing
+tool (this bench, tools/ab_interleaved.py, tools/profile_queries.py).
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
-from structured_streaming_cassandra_sink_spark.session import _local_cores  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = str(_local_cores())  # SPARK_GRAFT_CPUS, else the host core count
+from structured_streaming_cassandra_sink_spark.session import get_spark  # noqa: E402
+from structured_streaming_cassandra_sink_spark.sources.tables import (  # noqa: E402
+    DEFAULT_SF_DIR as SF_DIR,
+)
+from run import host_interval, host_sample  # noqa: E402
+from tracing import cpu_seconds  # noqa: E402
 
 
 def _sf_from_dir(d: str) -> float:
@@ -44,69 +52,36 @@ def replaces_full_record(names, registered, sf: float, committed: dict | None) -
     return set(registered) <= set(names) and (committed is None or committed.get("sf") == sf)
 
 
-def _loadavg() -> list[float] | None:
-    try:
-        with open("/proc/loadavg") as fh:
-            return [float(x) for x in fh.read().split()[:3]]
-    except (OSError, ValueError):
-        return None
+def settle(spark, dt: float) -> None:
+    """Drift control after every measured query (round-2 postmortem: the
+    same trivial scan measured 0.4 s early-run vs 3.6 s late-run from
+    accumulated localCheckpoint blocks + deferred JVM GC): python-gc the
+    dropped DataFrames' py4j proxies and force a JVM System.gc() so the
+    ContextCleaner frees checkpoint blocks before the next measurement
+    instead of during it, then, after a heavy query (``dt`` seconds), a
+    bounded drain window for the block manager."""
+    gc.collect()
+    spark._jvm.System.gc()
+    if dt > 2.0:
+        time.sleep(min(2.0, dt / 2))
 
 
-def _cpu_jiffies() -> tuple[int, int, int] | None:
-    """(total, idle+iowait, steal) jiffies from the aggregate cpu line."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        if parts[0] != "cpu":
-            return None
-        vals = [int(x) for x in parts[1:]]
-        total = sum(vals)
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        steal = vals[7] if len(vals) > 7 else 0
-        return total, idle, steal
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _ambient_sample(prev: tuple[int, int, int] | None) -> tuple[dict, tuple | None]:
-    """One ambient-drift record: loadavg now + busy/steal fractions of
-    the interval since `prev`. Lives in the committed artifact so a
-    drifted bench run is self-evidently ambient (r7 verdict: the +24%
-    protocol number could only be argued ambient from out-of-band
-    notes)."""
-    cur = _cpu_jiffies()
-    rec: dict = {"loadavg": _loadavg()}
-    if prev is not None and cur is not None:
-        dt = cur[0] - prev[0]
-        if dt > 0:
-            rec["cpu_busy_frac"] = round(1.0 - (cur[1] - prev[1]) / dt, 4)
-            rec["cpu_steal_frac"] = round((cur[2] - prev[2]) / dt, 6)
-    return rec, cur
-
-
-def bench_session(app_name: str):
-    """The measuring session: every timing tool (this bench,
-    tools/ab_interleaved.py, tools/profile_queries.py) runs under this
-    one conf, so their numbers are comparable."""
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+def timed_step(spark, fn, sf_dir: str = SF_DIR) -> tuple[float, float]:
+    """Build ``fn(spark, sf_dir)`` and force it with a ``noop`` write;
+    return its wall and CPU seconds (``tracing.cpu_seconds``: this
+    process, the JVM and the Python workers). The DataFrame is dropped
+    and the session settled before returning, untimed."""
+    c0, t0 = cpu_seconds(), time.perf_counter()
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    dt, cpu = time.perf_counter() - t0, cpu_seconds() - c0
+    del df
+    settle(spark, dt)
+    return dt, cpu
 
 
 def main() -> int:
-    spark = bench_session("structured-streaming-cassandra-sink-spark-bench")
+    spark = get_spark(app_name="structured-streaming-cassandra-sink-spark-bench")
 
     import __spark_entry__ as entrymod
 
@@ -171,26 +146,21 @@ def main() -> int:
         dupgraph_build(spark, SF_DIR)
         extras["dupgraph_build_sec"] = round(time.perf_counter() - t0, 3)
 
-    import gc
-
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     samples: dict[str, list[float]] = {n: [] for n in names}
+    # One ambient-drift record per pass (load, busy and steal of the
+    # host), kept in the artifact so a drifted run is self-evidently
+    # ambient (r7 verdict: the +24% protocol number could only be argued
+    # ambient from out-of-band notes).
     ambient: list[dict] = []
-    _amb0, _jiff = _ambient_sample(None)
-    ambient.append({"at": "start", **_amb0})
+    host = host_sample()
     t_total = time.perf_counter()
-    # Drift control (round-2 postmortem: the same trivial scan measured
-    # 0.4 s early-run vs 3.6 s late-run from accumulated localCheckpoint
-    # blocks + deferred JVM GC):
-    #  1. after EVERY timed run — not just heavy ones — drop DataFrame
-    #     refs, python-gc the py4j proxies, and force a JVM System.gc()
-    #     so the ContextCleaner frees checkpoint blocks before the next
-    #     measurement instead of during it (~0.1 s/query, untimed);
-    #  2. interleave passes (run the whole list, then run it again)
+    # Beyond timed_step's per-query settle:
+    #  1. interleave passes (run the whole list, then run it again)
     #     instead of back-to-back repeats, so a one-off background event
     #     can't poison both samples of one query — min-over-passes then
     #     reads through any single drift window;
-    #  3. REVERSE the order on alternate passes (round-3 postmortem:
+    #  2. REVERSE the order on alternate passes (round-3 postmortem:
     #     shingle_containment recorded 6.0 s in the full run but 2.5 s
     #     under the same protocol in isolation — with a DETERMINISTIC
     #     pass order the same heavy predecessor leaves the same deferred
@@ -199,20 +169,9 @@ def main() -> int:
     #     two different predecessors).
     for p in range(runs):
         for name in (names if p % 2 == 0 else list(reversed(names))):
-            t0 = time.perf_counter()
-            df = queries[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            samples[name].append(dt)
-            df = None
-            gc.collect()
-            spark._jvm.System.gc()
-            if dt > 2.0:
-                # bounded drain window after heavy queries: let the block
-                # manager finish freeing before the next timed region
-                time.sleep(min(2.0, dt / 2))
-        _amb, _jiff = _ambient_sample(_jiff)
-        ambient.append({"at": f"end_pass_{p}", **_amb})
+            samples[name].append(timed_step(spark, queries[name])[0])
+        host, prev = host_sample(), host
+        ambient.append({"pass": p, **{k: round(v, 4) for k, v in host_interval(prev, host).items()}})
     timings = {n: round(min(ts), 3) for n, ts in samples.items()}
     total = round(time.perf_counter() - t_total, 3)
 
@@ -235,7 +194,7 @@ def main() -> int:
         "ambient": ambient,
         **extras,
     }
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
+    full_path = os.path.join(ROOT, "BENCH_FULL.json")
     try:
         with open(full_path) as fh:
             committed = json.load(fh)
@@ -258,11 +217,10 @@ def main() -> int:
     # Printed line gets a compact ambient summary (full per-pass records
     # stay in BENCH_FULL.json): enough for the driver-recorded artifact
     # to prove/disprove ambient drift on its own.
-    _passes = [a for a in ambient if "cpu_busy_frac" in a]
     line["ambient"] = {
-        "load1_max": max((a["loadavg"][0] for a in ambient if a.get("loadavg")), default=None),
-        "busy_max": max((a["cpu_busy_frac"] for a in _passes), default=None),
-        "steal_max": max((a["cpu_steal_frac"] for a in _passes), default=None),
+        "load1_max": max((a["loadavg_1m"] for a in ambient), default=None),
+        "busy_max": max((a["cpu_busy_frac"] for a in ambient), default=None),
+        "steal_max": max((a["cpu_steal_frac"] for a in ambient), default=None),
     }
     budget = 1800  # bytes for the printed line, < driver's 2000-char tail
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])

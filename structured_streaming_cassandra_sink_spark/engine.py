@@ -36,6 +36,12 @@ from .sources import load_table
 from .sources.tables import DEFAULT_SF_DIR, register_views
 
 
+def plan_string(df: DataFrame, mode: str = "formatted") -> str:
+    """The plan of ``df`` as ``df.explain(mode)`` prints it, as a string."""
+    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
+    return df._jdf.queryExecution().explainString(jmode)
+
+
 class Engine:
     """Session + catalog + operator registry behind one object."""
 
@@ -76,11 +82,7 @@ class Engine:
 
     def explain(self, name: str, mode: str = "formatted") -> str:
         """Formatted physical plan of a registered query (not executed)."""
-        df = self.query(name)
-        jmode = self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            mode
-        )
-        return df._jdf.queryExecution().explainString(jmode)
+        return plan_string(self.query(name), mode)
 
     # -------------------------------------------------------- observability
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from structured_streaming_cassandra_sink_spark.engine import plan_string
 from structured_streaming_cassandra_sink_spark.operators.geo import (
     RADIUS_KM,
     geo_grid_hotspots,
@@ -126,8 +127,7 @@ def test_radius_join_plan_no_cartesian_no_python(spark, sf_dir):
     (shuffle/broadcast HASH join), never CartesianProduct or
     BroadcastNestedLoopJoin, and pure Catalyst (no Python eval)."""
     df = geo_radius_join(spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = df._jdf.queryExecution().explainString(mode)
+    plan = plan_string(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan

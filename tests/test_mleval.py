@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+from structured_streaming_cassandra_sink_spark.engine import plan_string
 from structured_streaming_cassandra_sink_spark.operators import mleval
 from structured_streaming_cassandra_sink_spark.plans import registry
 
@@ -14,11 +15,7 @@ Q = registry.QUERIES
 
 
 def _plan(spark, sf_dir, name):
-    df = Q[name](spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    return df._jdf.queryExecution().explainString(mode)
+    return plan_string(Q[name](spark, sf_dir))
 
 
 def test_auc_bounds_and_separable_case(spark, sf_dir):

@@ -14,15 +14,14 @@ import re
 
 import pytest
 
+from structured_streaming_cassandra_sink_spark.engine import plan_string
 from structured_streaming_cassandra_sink_spark.plans import registry
 
 registry.load_all()
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = registry.QUERIES[name](spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
+    return plan_string(registry.QUERIES[name](spark, sf_dir))
 
 
 def test_broadcast_join_for_dims(spark, sf_dir):

@@ -5,9 +5,10 @@ The decisive instrument on this box (r10 postmortem: full-bench totals on
 IDENTICAL code drifted ±12% across one evening, so no two runs hours apart
 are comparable). Protocol: ONE Spark session, both implementations of each
 query run alternately (order flips per pass, bench.py-style), >=4 timed
-samples each after an untimed warm-up, same noop-sink timing as bench.py.
-Each sample records wall seconds and CPU seconds (user + system of this
-process, the JVM and the Python workers, as perfbench's ``cpu_s``).
+samples each after an untimed warm-up, each one bench.py's ``timed_step``
+on ``session.get_spark``'s session. Each sample records wall seconds and
+CPU seconds (user + system of this process, the JVM and the Python
+workers, as perfbench's ``cpu_s``).
 
 Usage:
     python tools/ab_interleaved.py --old /tmp/repo_r9 q1 q2 ...
@@ -25,7 +26,6 @@ prebuilt artifacts (dupgraph, ANN indexes).
 from __future__ import annotations
 
 import argparse
-import gc
 import importlib
 import json
 import os
@@ -36,10 +36,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import SF_DIR, bench_session  # noqa: E402
-
-sys.path.insert(0, os.path.join(REPO, "perfbench"))
-from tracing import cpu_seconds  # noqa: E402
+from bench import timed_step  # noqa: E402
+from structured_streaming_cassandra_sink_spark.session import get_spark  # noqa: E402
 
 PKG = "structured_streaming_cassandra_sink_spark"
 
@@ -93,20 +91,7 @@ def main() -> int:
                   file=sys.stderr)
             return 2
 
-    spark = bench_session("ab-interleaved")
-    spark.read.parquet(f"{SF_DIR}/nation.parquet").count()
-
-    def timed(fn) -> tuple[float, float]:
-        c0, t0 = cpu_seconds(), time.perf_counter()
-        df = fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        dt, cpu = time.perf_counter() - t0, cpu_seconds() - c0
-        del df
-        gc.collect()
-        spark._jvm.System.gc()
-        if dt > 2.0:
-            time.sleep(min(2.0, dt / 2))
-        return dt, cpu
+    spark = get_spark(app_name="ab-interleaved")
 
     results: dict[str, dict] = {}
     samples: dict[tuple[str, str], list[float]] = {}
@@ -117,9 +102,9 @@ def main() -> int:
             cpus[(name, variant)] = []
         # untimed warm-up of BOTH shapes (JIT/codegen/IO cache)
         spark.sparkContext.setJobDescription(f"warmup old {name}")
-        timed(old_q[name])
+        timed_step(spark, old_q[name])
         spark.sparkContext.setJobDescription(f"warmup new {name}")
-        timed(new_q[name])
+        timed_step(spark, new_q[name])
 
     for p in range(args.samples):
         order = ["old", "new"] if p % 2 == 0 else ["new", "old"]
@@ -127,7 +112,7 @@ def main() -> int:
             for variant in order:
                 fn = old_q[name] if variant == "old" else new_q[name]
                 spark.sparkContext.setJobDescription(f"{variant} {name} pass{p}")
-                dt, cpu = timed(fn)
+                dt, cpu = timed_step(spark, fn)
                 samples[(name, variant)].append(dt)
                 cpus[(name, variant)].append(cpu)
 

@@ -181,7 +181,12 @@ def main() -> int:
         # contracts shows up here before it burns a driver slot.
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master(f"local[{_local_cores()}]").getOrCreate()
+        spark = (
+            SparkSession.builder.master(f"local[{_local_cores()}]")
+            # keeps the progress bar off the result lines; no plan changes
+            .config("spark.ui.showConsoleProgress", "false")
+            .getOrCreate()
+        )
         spark.sparkContext.setLogLevel("ERROR")
     else:
         spark = get_spark(app_name="check")

@@ -134,7 +134,7 @@ def main() -> int:
     extra = gt - planted
     assert planted <= gt, "planted pair missing from exact sweep?"
 
-    spark = get_spark(app_name="lsh-recall", shuffle_partitions=32)
+    spark = get_spark(app_name="lsh-recall")
     spark.sparkContext.setLogLevel("ERROR")
     load_all()
     t0 = time.time()

@@ -140,6 +140,7 @@ def main() -> int:
         out_path = args[1]
         args = args[2:]
 
+    from structured_streaming_cassandra_sink_spark.engine import plan_string
     from structured_streaming_cassandra_sink_spark.plans import registry
     from structured_streaming_cassandra_sink_spark.session import get_spark
 
@@ -151,11 +152,7 @@ def main() -> int:
     report, violations = {}, []
     for name in names:
         try:
-            df = registry.QUERIES[name](spark, SF_DIR)
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-            plan = df._jdf.queryExecution().explainString(mode)
+            plan = plan_string(registry.QUERIES[name](spark, SF_DIR))
         except Exception as exc:  # noqa: BLE001
             report[name] = {"error": str(exc)[:200]}
             violations.append((name, "plan_failed"))

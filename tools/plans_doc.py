@@ -71,6 +71,7 @@ HEADLINERS = {
 
 
 def main() -> int:
+    from structured_streaming_cassandra_sink_spark.engine import plan_string
     from structured_streaming_cassandra_sink_spark.plans import registry
     from structured_streaming_cassandra_sink_spark.session import get_spark
 
@@ -86,9 +87,7 @@ def main() -> int:
         "",
     ]
     for name, why in HEADLINERS.items():
-        df = registry.QUERIES[name](spark, SF_DIR)
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = plan_string(registry.QUERIES[name](spark, SF_DIR))
         # keep the operator tree + the interesting node details, cap size
         lines = plan.rstrip().splitlines()
         if len(lines) > 80:

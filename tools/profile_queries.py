@@ -1,7 +1,16 @@
 #!/usr/bin/env python
-"""Per-query profiler — wall time split into plan-build vs execute, plus
-Spark job/stage/task counts from the UI REST API (guide §1: measure first,
-decide where the time actually goes before touching anything).
+"""Per-query profiler — one layer record of where each query's time went,
+without the Spark UI: measure first, decide where the time actually goes
+before touching anything.
+
+Each query runs once under perfbench's ``tracing.Tracer`` on
+``session.get_spark``'s session (UI off), and its spans reduce through
+``layers.batch_layers`` to the record perfbench emits for a batch pass:
+parquet resolution and eager jobs in the build (``sources.*``,
+``operators.*``, with local checkpoints and the Python/py4j remainder),
+Catalyst analysis/optimization/planning (``catalyst.*``), execution jobs,
+stages, tasks, shuffle and spill (``exec.*``, attributed by job group from
+the JVM status store), and ``trace.coverage``.
 
 Usage:
     python tools/profile_queries.py q1 q2 ...     # named queries
@@ -9,7 +18,8 @@ Usage:
     python tools/profile_queries.py --all
 
 Writes one JSON line per query to stdout and (optionally, --plans DIR)
-the formatted plan per query to DIR/<name>_before.txt.
+the formatted plan per query to DIR/<name><suffix>.txt (--suffix,
+default ``_before``).
 """
 
 from __future__ import annotations
@@ -18,23 +28,57 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from bench import SF_DIR, bench_session  # noqa: E402
+from bench import SF_DIR, settle  # noqa: E402 - also puts perfbench/ on sys.path
+from layers import batch_layers  # noqa: E402
+from run import PER_LAYER  # noqa: E402
+from structured_streaming_cassandra_sink_spark.engine import plan_string  # noqa: E402
+from structured_streaming_cassandra_sink_spark.session import get_spark  # noqa: E402
+from tracing import Tracer, job_stats  # noqa: E402
+
+BATCH_LAYERS = [k for k in PER_LAYER if k.split(".")[0] in ("sources", "operators", "catalyst", "exec")]
 
 
-def _rest(base: str, app: str, path: str):
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/{path}") as r:
-        return json.load(r)
+def profile(spark, tr: Tracer, name: str, fn, sf_dir: str = SF_DIR,
+            plan_file: str | None = None) -> dict:
+    """Build, plan and ``noop``-write ``fn(spark, sf_dir)`` under ``tr``
+    and return its layer record; write its formatted plan to
+    ``plan_file`` if given. The session is settled afterwards, untimed.
+    Use one tracer per session: its span ids name the job groups."""
+    first = len(tr.spans)
+    tr.install()
+    try:
+        t0 = time.perf_counter()
+        with tr.span("query", name):
+            with tr.span("operators.build", name, jobs=True):
+                df = fn(spark, sf_dir)
+            with tr.span("catalyst.plan", name) as cat:
+                cat["phases"] = tr.catalyst_phases(df)
+            with tr.span("exec.noop_write", name, jobs=True):
+                df.write.format("noop").mode("overwrite").save()
+        with tr.span("trace.bookkeeping", name):
+            tr.flush_listeners()
+            for s in tr.spans[first:]:
+                if "group" in s:
+                    s["jobs"] = job_stats(spark, s["group"], tr)
+        wall = time.perf_counter() - t0
+    finally:
+        tr.uninstall()
+    unit = {"span_range": (first, len(tr.spans)), "wall_s": wall}
+    rec = {**dict.fromkeys(BATCH_LAYERS, 0.0),
+           **batch_layers(tr.spans, [unit], spark.sparkContext.defaultParallelism)}
+    if plan_file:
+        with open(plan_file, "w") as fh:
+            fh.write(plan_string(df))
+    del df
+    settle(spark, wall)
+    return {"query": name, "wall_s": round(wall, 3), **{k: round(v, 4) for k, v in rec.items()}}
 
 
 def main() -> int:
-    spark = bench_session("profile-queries")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
@@ -52,7 +96,8 @@ def main() -> int:
         suffix = args[i + 1]
         del args[i : i + 2]
     if args and args[0] == "--top":
-        bf = json.load(open(os.path.join(os.path.dirname(__file__), "..", "BENCH_FULL.json")))
+        with open(os.path.join(REPO, "BENCH_FULL.json")) as fh:
+            bf = json.load(fh)
         names = [k for k, _ in sorted(bf["queries"].items(), key=lambda kv: -kv[1])][: int(args[1])]
     elif args and args[0] == "--all":
         names = sorted(queries)
@@ -63,56 +108,18 @@ def main() -> int:
         print(f"unknown: {unknown}", file=sys.stderr)
         return 2
 
+    spark = get_spark(app_name="profile-queries")
     # warm-up
     spark.read.parquet(f"{SF_DIR}/nation.parquet").count()
 
-    import gc
-
-    out = []
+    tracer = Tracer(spark)
+    total = 0.0
     for name in names:
-        jobs0 = _rest(ui, app_id, "jobs")
-        n_jobs0 = len(jobs0)
-        t0 = time.perf_counter()
-        df = queries[name](spark, SF_DIR)
-        t_build = time.perf_counter() - t0
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t_exec = time.perf_counter() - t1
-        jobs1 = _rest(ui, app_id, "jobs")
-        new_jobs = [j for j in jobs1 if j["jobId"] not in {x["jobId"] for x in jobs0}]
-        n_stages = sum(len(j.get("stageIds", [])) for j in new_jobs)
-        n_tasks = sum(j.get("numTasks", 0) for j in new_jobs)
-        rec = {
-            "query": name,
-            "total_sec": round(t_build + t_exec, 3),
-            "build_sec": round(t_build, 3),
-            "exec_sec": round(t_exec, 3),
-            "n_jobs": len(jobs1) - n_jobs0,
-            "n_stages": n_stages,
-            "n_tasks": n_tasks,
-        }
-        if plans_dir:
-            try:
-                plan = df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                )
-            except Exception:
-                import io
-                from contextlib import redirect_stdout
-
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    df.explain("formatted")
-                plan = buf.getvalue()
-            with open(os.path.join(plans_dir, f"{name}{suffix}.txt"), "w") as fh:
-                fh.write(plan)
-        out.append(rec)
+        plan_file = os.path.join(plans_dir, f"{name}{suffix}.txt") if plans_dir else None
+        rec = profile(spark, tracer, name, queries[name], plan_file=plan_file)
+        total += rec["wall_s"]
         print(json.dumps(rec), flush=True)
-        df = None
-        gc.collect()
-        spark._jvm.System.gc()
-    total = sum(r["total_sec"] for r in out)
-    print(json.dumps({"profiled": len(out), "sum_sec": round(total, 3)}))
+    print(json.dumps({"profiled": len(names), "sum_sec": round(total, 3)}))
     spark.stop()
     return 0
 
