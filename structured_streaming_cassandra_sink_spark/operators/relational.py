@@ -2326,17 +2326,21 @@ _COPURCHASE_EDGES_SQL = f"""
       UNION ALL SELECT pb, pa FROM pairs)"""
 
 
-def _copurchase_edges(spark: SparkSession, sf_dir: str):
-    """Symmetric support-filtered co-purchase edge list — the shared
-    graph every structure statistic below runs on (same construction
-    as graph_sssp_weighted, weights dropped)."""
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(s, d): symmetric support-filtered co-purchase edge list — the
+    shared graph every structure statistic below runs on (same
+    construction as graph_sssp_weighted, weights dropped).
+
+    Both directions of each pair come from one explode of a two-struct
+    array, so the pair aggregate is computed once; a unionAll of two
+    projections would plan it twice."""
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     pairs = _copurchase_pair_counts(li).filter(F.col("n") >= SSSP_MIN_SUPPORT)
-    return (
-        pairs.select(F.col("pa").alias("s"), F.col("pb").alias("d"))
-        .unionAll(pairs.select(F.col("pb").alias("s"), F.col("pa").alias("d")))
-        .localCheckpoint(eager=False)
+    both = F.array(
+        F.struct(F.col("pa").alias("s"), F.col("pb").alias("d")),
+        F.struct(F.col("pb").alias("s"), F.col("pa").alias("d")),
     )
+    return pairs.select(F.explode(both).alias("e")).select("e.s", "e.d")
 
 
 @query(
@@ -2379,7 +2383,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg~10^4 at |E|~10^9, then DECIMAL swap, documented), one float at
     the end. Symmetric edges make sx == sy; kept separate so the
     formula is the general directed one."""
-    edges = _copurchase_edges(spark, sf_dir)
+    # read twice (degrees, then the endpoint joins): materialize once
+    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = edges.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).alias("k")
     )
@@ -2431,6 +2436,34 @@ _KCORE_ORACLE = (
 )
 
 
+def _kcore_peel(msgs: DataFrame) -> DataFrame:
+    """(node, degree_in_core) of the KCORE_K-core that KCORE_ROUNDS
+    synchronous peel rounds leave of a symmetric message set (s, d).
+
+    Each row is a message from a live source s to a destination d. One
+    round is one shuffle by receiver: a destination that heard from
+    >= KCORE_K live neighbours survives and answers every source that
+    wrote to it; the others fall silent. A peeled node never returns —
+    it had < KCORE_K live neighbours, and a subset of them cannot reach
+    KCORE_K — so round i's senders are exactly the survivors of the
+    edge-list peel after i rounds, and the final receiver count is the
+    same degree_in_core. Memory: one row holds one node's live
+    in-neighbours, O(max degree)."""
+    for _ in range(KCORE_ROUNDS):
+        msgs = (
+            msgs.groupBy("d")
+            .agg(F.collect_list("s").alias("ss"))
+            .filter(F.size("ss") >= KCORE_K)
+            .select(F.col("d").alias("s"), F.explode("ss").alias("d"))
+        )
+    final_deg = msgs.groupBy(F.col("d").alias("node")).agg(
+        F.count(F.lit(1)).alias("degree_in_core")
+    )
+    return final_deg.filter(F.col("degree_in_core") >= KCORE_K).select(
+        "node", F.col("degree_in_core").cast("bigint").alias("degree_in_core")
+    )
+
+
 @query("graph_kcore", _KCORE_ORACLE)
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{KCORE_K}-core of the co-purchase graph by synchronous peeling:
@@ -2442,31 +2475,15 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic non-vacuous on the sparse high-sf co-purchase graphs
     (max degree 6 at sf0.1), where a triangle core is already empty.
 
-    Per round: one hash agg (degrees) + two semi-join-shaped filters
-    of the edge list against the survivor set, `localCheckpoint` to cut
-    lineage — the CC/BFS discipline, cost |E| per round. The round
+    Shape: one lazy vertex-centric message-passing plan (Pregel,
+    _kcore_peel) — one collect_list shuffle by receiving vertex per
+    round, cost |E| per round, no join and no checkpoint. The round
     count is FIXED (bounded driver loop, like PageRank/BFS): peeling
-    converges when a round removes nothing, monitored in tests at test
-    scale; production picks rounds from the degeneracy-ordering depth
-    or runs to fixpoint with the same per-round plan. All-integer
-    logic, no FP parity concerns."""
-    edges = _copurchase_edges(spark, sf_dir)
-    e = edges
-    for _ in range(KCORE_ROUNDS):
-        deg = e.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("k"))
-        keep = deg.filter(F.col("k") >= KCORE_K).select("node")
-        e = (
-            e.join(keep.withColumnRenamed("node", "s"), "s")
-            .join(keep.withColumnRenamed("node", "d"), "d")
-            .select("s", "d")
-            .localCheckpoint(eager=False)
-        )
-    final_deg = e.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree_in_core")
-    )
-    return final_deg.filter(F.col("degree_in_core") >= KCORE_K).select(
-        "node", F.col("degree_in_core").cast("bigint").alias("degree_in_core")
-    )
+    converges when a round removes nothing, checked against a Python
+    fixpoint peel in tests at test scale; production picks rounds from
+    the degeneracy-ordering depth. All-integer logic, no FP parity
+    concerns."""
+    return _kcore_peel(_copurchase_edges(spark, sf_dir))
 
 
 # ------------------------------------------------- subquery_double_exists

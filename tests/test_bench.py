@@ -1,5 +1,6 @@
-"""The measuring harness: bench.py's BENCH_FULL.json guard (Spark-free),
-its one-session/one-step structure, and the UI-free profiler."""
+"""The measuring harness: bench.py's BENCH_FULL.json guard and the A/B
+summary (both Spark-free), its one-session/one-step structure, and the
+UI-free profiler."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
+from ab_interleaved import summarize  # noqa: E402
 from bench import replaces_full_record  # noqa: E402
 
 REGISTERED = ["q1", "q2", "q3"]
@@ -26,6 +28,21 @@ def test_other_scale_run_leaves_full_record():
 def test_full_same_scale_run_writes_full_record():
     assert replaces_full_record(list(reversed(REGISTERED)), REGISTERED, 0.1, RECORD)
     assert replaces_full_record(REGISTERED, REGISTERED, 0.01, None)
+
+
+def test_ab_summary_carries_gain_rule_inputs():
+    """Wins are strict per-pass (a tie counts for neither side) and the
+    old side's quartiles are the exclusive-method q1/q3."""
+    old = [10.0, 11.0, 12.0, 13.0, 14.0, 15.0, 16.0, 17.0, 18.0, 19.0]
+    new = [9.0, 10.0, 11.0, 12.0, 13.0, 14.0, 15.0, 16.0, 17.0, 19.0]
+    cpu_old, cpu_new = [2.0] * 10, [2.0] * 5 + [1.0] * 5
+    r = summarize(old, new, cpu_old, cpu_new)
+    assert (r["wall_wins"], r["cpu_wins"]) == (9, 5)
+    assert (r["old_q1"], r["old_q3"]) == (11.75, 17.25)
+    assert (r["old_cpu_q1"], r["old_cpu_q3"]) == (2.0, 2.0)
+    assert (r["old_median"], r["new_median"]) == (14.5, 13.5)
+    one = summarize([3.0], [2.0], [1.0], [1.0])
+    assert (one["old_q1"], one["old_q3"], one["wall_wins"], one["cpu_wins"]) == (3.0, 3.0, 1, 0)
 
 
 def _py_files_containing(*tokens: str) -> dict[str, set[str]]:

@@ -1616,11 +1616,44 @@ def test_running_balance_matches_sequential_clamp(spark, sf_dir):
             )
 
 
+def _python_peel(edges, rounds):
+    """{node: degree} left by `rounds` synchronous peel rounds of a
+    symmetric directed edge set, then the final degree >= KCORE_K filter
+    — the oracle's edge-list peel, in Python."""
+    from collections import Counter
+
+    from structured_streaming_cassandra_sink_spark.operators.relational import KCORE_K
+
+    e = set(edges)
+    for _ in range(rounds):
+        deg = Counter(s for s, _ in e)
+        keep = {n for n, k in deg.items() if k >= KCORE_K}
+        e = {(s, d) for s, d in e if s in keep and d in keep}
+    deg = Counter(s for s, _ in e)
+    return {n: k for n, k in deg.items() if k >= KCORE_K}
+
+
+def _python_fixpoint_peel(edges):
+    """The KCORE_K-core of a symmetric edge set: peel until a round
+    removes nothing."""
+    e, prev = set(edges), None
+    while e != prev:
+        prev = e
+        core = _python_peel(e, 0)
+        e = {(s, d) for s, d in e if s in core and d in core}
+    return _python_peel(e, 0)
+
+
+def _undirected(pairs):
+    return pairs + [(b, a) for a, b in pairs]
+
+
 def test_kcore_membership_closed_and_converged(spark, sf_dir):
     """Every surviving node has >= K neighbors INSIDE the core (core
-    closure), and one more peel round removes nothing (the fixed round
-    budget reached the fixpoint at test scale)."""
-    import pyspark.sql.functions as F
+    closure), and the query returns exactly the maximal core with its
+    degrees: a Python peel of the same edges to its fixpoint (the fixed
+    round budget reaches the fixpoint at test scale)."""
+    from collections import defaultdict
 
     from structured_streaming_cassandra_sink_spark.operators.relational import (
         KCORE_K,
@@ -1628,20 +1661,51 @@ def test_kcore_membership_closed_and_converged(spark, sf_dir):
     )
     from structured_streaming_cassandra_sink_spark.plans.registry import QUERIES
 
-    core = QUERIES["graph_kcore"](spark, sf_dir)
-    nodes = {r["node"] for r in core.collect()}
-    assert nodes, "2-core must be non-empty at test scale"
-    edges = _copurchase_edges(spark, sf_dir).collect()
-    from collections import defaultdict
-
+    got = {r["node"]: r["degree_in_core"] for r in QUERIES["graph_kcore"](spark, sf_dir).collect()}
+    assert got, "2-core must be non-empty at test scale"
+    edges = [(r["s"], r["d"]) for r in _copurchase_edges(spark, sf_dir).collect()]
     nbrs = defaultdict(set)
-    for r in edges:
-        nbrs[r["s"]].add(r["d"])
-    for n in nodes:
-        assert len(nbrs[n] & nodes) >= KCORE_K, n
-    # fixpoint: peeling the returned core once more removes nobody
-    for n in nodes:
-        assert len(nbrs[n] & nodes) >= KCORE_K
+    for s, d in edges:
+        nbrs[s].add(d)
+    for n in got:
+        assert len(nbrs[n] & got.keys()) >= KCORE_K, n
+    assert got == _python_fixpoint_peel(edges)
+
+
+_TAIL = _undirected([(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5)])
+# Longer than the round budget: the peel stops mid-cascade, so the result
+# is the fixed-round answer, not the core.
+_LONG_TAIL = _undirected([(0, 1), (1, 2), (2, 0)] + [(i, i + 1) for i in range(2, 9)])
+_BRIDGE = _undirected([(0, 1), (1, 2), (2, 0), (2, 6), (6, 7), (7, 3), (3, 4), (4, 5), (5, 3)])
+_HUB = _undirected([(0, 1), (1, 2), (2, 3), (3, 0)] + [(0, 100 + i) for i in range(10_000)])
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [_TAIL, _LONG_TAIL, _BRIDGE, _HUB],
+    ids=[
+        "triangle_with_tail",
+        "triangle_with_tail_past_round_budget",
+        "triangles_joined_by_path",
+        "four_cycle_hub_10k_leaves",
+    ],
+)
+def test_kcore_peel_matches_python_peel(spark, edges):
+    """The message-passing peel equals the synchronous edge-list peel of
+    KCORE_ROUNDS rounds, node set and degree_in_core: a tail that
+    cascades one node per round (and one that outlasts the rounds), two
+    triangles whose joining path survives, and a hub whose single row
+    holds 10,002 messages."""
+    from structured_streaming_cassandra_sink_spark.operators.relational import (
+        KCORE_ROUNDS,
+        _kcore_peel,
+    )
+
+    msgs = spark.createDataFrame(edges, "s long, d long")
+    got = {r["node"]: r["degree_in_core"] for r in _kcore_peel(msgs).collect()}
+    want = _python_peel(edges, KCORE_ROUNDS)
+    assert want, "every graph keeps a non-empty core"
+    assert got == want
 
 
 def test_assortativity_in_range(spark, sf_dir):

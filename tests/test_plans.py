@@ -914,3 +914,14 @@ def test_bench_full_artifact_covers_registry():
     data = json.load(open(os.path.join(root, "BENCH_FULL.json")))
     missing = set(registry.QUERIES) - set(data["queries"])
     assert not missing, f"BENCH_FULL.json missing {sorted(missing)[:5]}"
+
+
+def test_kcore_is_one_message_passing_plan(spark, sf_dir):
+    """graph_kcore is one lazy plan: no checkpointed RDD scan, and one
+    shuffle per peel round on top of the edge build's two (order key,
+    pair) and the final degree count."""
+    from structured_streaming_cassandra_sink_spark.operators.relational import KCORE_ROUNDS
+
+    plan = _plan(spark, sf_dir, "graph_kcore")
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == KCORE_ROUNDS + 3, plan

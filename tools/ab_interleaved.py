@@ -15,7 +15,9 @@ Usage:
     python tools/ab_interleaved.py --old /tmp/repo_r9 --samples 6 q1
 
 Results print as JSON lines and are written to ``--out``, by default
-``bench_ab/ab_<timestamp>.json`` in this repo.
+``bench_ab/ab_<timestamp>.json`` in this repo. Each query's record also
+carries the inputs of the gain rule (``summarize``): the passes new won
+on wall and CPU time, and the old side's quartiles.
 
 The OLD version is loaded from a git worktree checkout by temporarily
 swapping sys.modules/sys.path so both registries coexist in one process.
@@ -70,6 +72,47 @@ def _load_registry(repo_path: str) -> dict:
     return queries
 
 
+def _quartiles(xs: list[float]) -> tuple[float, float]:
+    """(q1, q3) of xs, exclusive method; one sample is its own quartiles."""
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q1, _, q3 = statistics.quantiles(xs, n=4)
+    return q1, q3
+
+
+def summarize(o: list[float], n: list[float], oc: list[float], nc: list[float]) -> dict:
+    """One query's record from per-pass wall (o, n) and CPU (oc, nc)
+    seconds of the old and new sides, pass i of each side paired.
+
+    Besides minima, medians and their ratios it carries the inputs of
+    the gain rule (choosing-metrics §8: new wins >= 9/10 passes and the
+    median gap exceeds the old side's IQR): ``wall_wins``/``cpu_wins``
+    count the passes where new was strictly lower (ties count for
+    neither), and ``old_q1``/``old_q3`` (wall) and
+    ``old_cpu_q1``/``old_cpu_q3`` are the old side's quartiles."""
+    (q1, q3), (cq1, cq3) = _quartiles(o), _quartiles(oc)
+    return {
+        "old": [round(x, 3) for x in o],
+        "new": [round(x, 3) for x in n],
+        "old_min": round(min(o), 3),
+        "new_min": round(min(n), 3),
+        "old_median": round(statistics.median(o), 3),
+        "new_median": round(statistics.median(n), 3),
+        "old_q1": round(q1, 3),
+        "old_q3": round(q3, 3),
+        "wall_wins": sum(b < a for a, b in zip(o, n)),
+        "speedup_min": round(min(o) / min(n), 3),
+        "speedup_median": round(statistics.median(o) / statistics.median(n), 3),
+        "old_cpu": [round(x, 3) for x in oc],
+        "new_cpu": [round(x, 3) for x in nc],
+        "old_cpu_median": round(statistics.median(oc), 3),
+        "new_cpu_median": round(statistics.median(nc), 3),
+        "old_cpu_q1": round(cq1, 3),
+        "old_cpu_q3": round(cq3, 3),
+        "cpu_wins": sum(b < a for a, b in zip(oc, nc)),
+    }
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -117,24 +160,10 @@ def main() -> int:
                 cpus[(name, variant)].append(cpu)
 
     for name in args.names:
-        o, n = samples[(name, "old")], samples[(name, "new")]
-        oc, nc = cpus[(name, "old")], cpus[(name, "new")]
-        results[name] = {
-            "old": [round(x, 3) for x in o],
-            "new": [round(x, 3) for x in n],
-            "old_min": round(min(o), 3),
-            "new_min": round(min(n), 3),
-            "old_median": round(statistics.median(o), 3),
-            "new_median": round(statistics.median(n), 3),
-            "speedup_min": round(min(o) / min(n), 3),
-            "speedup_median": round(
-                statistics.median(o) / statistics.median(n), 3
-            ),
-            "old_cpu": [round(x, 3) for x in oc],
-            "new_cpu": [round(x, 3) for x in nc],
-            "old_cpu_median": round(statistics.median(oc), 3),
-            "new_cpu_median": round(statistics.median(nc), 3),
-        }
+        results[name] = summarize(
+            samples[(name, "old")], samples[(name, "new")],
+            cpus[(name, "old")], cpus[(name, "new")],
+        )
         print(json.dumps({"query": name, **results[name]}))
     os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     with open(args.out, "w") as fh:
